@@ -52,34 +52,12 @@ def main() -> int:
         action="store_true",
         help="spark.sql.autoBroadcastJoinThreshold=-1: force the shuffle-"
         "join regime a 10^12-record cluster would be in (no broadcastable "
-        "side), so the twin-vs-unpivot / python-vs-jvm A/Bs measure the "
-        "storage-partitioned-join shape instead of the broadcast shape",
+        "side), so the score stage measures the storage-partitioned-join "
+        "shape (and the JVM tf-idf cosine) instead of the broadcast shape",
     )
     ap.add_argument(
         "--codec", choices=["lz4", "zstd"], default="lz4",
         help="spark.io.compression.codec for shuffle blocks",
-    )
-    ap.add_argument(
-        "--cosine-impl",
-        choices=["python", "jvm"],
-        default="python",
-        help="score stage only: tf-idf cosine in the fused Arrow UDF vs as a "
-        "pure Catalyst expression (vectors never cross into Python)",
-    )
-    ap.add_argument(
-        "--vector-fetch",
-        choices=["twin", "unpivot"],
-        default="twin",
-        help="score stage only: twin l/r broadcast fetches vs single-exchange "
-        "unpivot fetch + pair-key regroup",
-    )
-    ap.add_argument(
-        "--pair-emit",
-        choices=["all", "lowest_slot"],
-        default="all",
-        help="block stage: duplicate pair emissions deduped by exchange "
-        "(all) vs suppressed at join time from the per-record key-slot "
-        "vectors, removing the dedupe exchange (lowest_slot)",
     )
     ap.add_argument(
         "--corpus",
@@ -148,7 +126,7 @@ def main() -> int:
         def fn():
             keys = B.all_block_keys(offers, cfg.blocking)
             capped = B.cap_blocks(keys, cfg.blocking).localCheckpoint(eager=True)
-            _noop(B.candidate_pairs(capped, cfg.blocking, emit=args.pair_emit))
+            _noop(B.candidate_pairs(capped, cfg.blocking))
 
     elif args.stage == "score":
         attrs = spark.read.parquet(os.path.join(wd, "attrs"))
@@ -165,8 +143,6 @@ def main() -> int:
                 pairs.repartition(2 * args.total_cores),
                 attrs,
                 gate_jaccard=cfg.scoring.gate_jaccard,
-                cosine_impl=args.cosine_impl,
-                vector_fetch=args.vector_fetch,
             )
             _noop(M.score_pairs(feats, matcher))
 

@@ -32,6 +32,20 @@ class BlockingConfig:
     salt_threshold: int = 50
     salt_buckets: int = 8
 
+    def __post_init__(self) -> None:
+        # candidate_pairs splits small/hot on the POST-cap block size, so a
+        # cap at or below the salt threshold would silently salt nothing.
+        if self.block_cap <= self.salt_threshold:
+            raise ValueError(
+                f"block_cap ({self.block_cap}) must exceed salt_threshold "
+                f"({self.salt_threshold})"
+            )
+        if self.lsh_bands * self.lsh_rows != self.minhash_k:
+            raise ValueError(
+                f"lsh_bands * lsh_rows ({self.lsh_bands} * {self.lsh_rows}) "
+                f"must equal minhash_k ({self.minhash_k})"
+            )
+
 
 @dataclass(frozen=True)
 class ScoringConfig:

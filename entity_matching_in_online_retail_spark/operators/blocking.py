@@ -9,7 +9,8 @@ tame skew". Three blockers, unioned, then capped and deduped:
   mh:  MinHash LSH bands   — b bands x r rows over xxhash64-seeded signature
 
 Skew strategy (scale design, 100 TB):
-  1. G1 block-size histogram (one cheap agg) drives decisions per key.
+  1. G1 block size per key (`_bsize`, a window riding cap_blocks' own
+     partitioning) drives the salting decision.
   2. W1 per-block cap: blocks larger than `block_cap` keep the `block_cap`
      smallest record_ids (deterministic) — bounds worst-case pairs per block
      to cap^2/2 regardless of input skew.
@@ -116,7 +117,7 @@ def all_block_keys(
 
 
 def block_stats(blocks: DataFrame) -> DataFrame:
-    """G1: block-size histogram — drives cap + salting decisions."""
+    """G1: block-size histogram (the aggregate form of cap_blocks' `_bsize`)."""
     return blocks.groupBy("block_key").agg(F.count(F.lit(1)).alias("block_size"))
 
 
@@ -133,8 +134,8 @@ def cap_blocks(blocks: DataFrame, cfg: BlockingConfig, id_col: str = "record_id"
     re-ran the stats exchange + hash-agg FOUR times (once per anti/semi
     branch side; plan-verified, plans/r06/er_block_pairs_before.txt).
     Classification is unchanged: post-cap size = min(pre-cap, block_cap),
-    and block_cap > salt_threshold, so (post > salt_threshold) ==
-    (pre > salt_threshold)."""
+    and BlockingConfig enforces block_cap > salt_threshold, so
+    (post > salt_threshold) == (pre > salt_threshold)."""
     w = W.partitionBy("block_key").orderBy(F.col(id_col))
     capped = (
         blocks.withColumn("_rn", F.row_number().over(w))
@@ -146,123 +147,24 @@ def cap_blocks(blocks: DataFrame, cfg: BlockingConfig, id_col: str = "record_id"
     )
 
 
-def _key_slot() -> F.Column:
-    """Blocker-priority slot of a block_key: pf=0, bm=1, dm=2, mh band b=3+b.
-
-    The slot order is arbitrary but must be a fixed total order shared by
-    every record — lowest-slot pair emission (below) relies on both members
-    of a pair agreeing on which colliding key is 'first'."""
-    head = F.substring("block_key", 1, 3)
-    return (
-        F.when(head == F.lit("pf:"), F.lit(0))
-        .when(head == F.lit("bm:"), F.lit(1))
-        .when(head == F.lit("dm:"), F.lit(2))
-        .otherwise(F.lit(3) + F.split("block_key", ":").getItem(1).cast("int"))
-    )
-
-
-def with_key_vec(
-    capped: DataFrame, cfg: BlockingConfig, id_col: str = "record_id"
-) -> DataFrame:
-    """Attach (_slot, _vec) to each capped block row: _vec[s] = xxhash64 of
-    the record's SURVIVING key in slot s, or a record-unique filler where no
-    key survived capping. Built post-cap on purpose: a key capped away must
-    not count as a collision, or the pair it would have emitted elsewhere
-    gets suppressed. One record_id-partitioned window (single exchange of
-    the key rows), no join-back."""
-    n_slots = 3 + cfg.lsh_bands
-    w_rec = W.partitionBy(id_col)
-    keyed = capped.select(
-        F.col(id_col),
-        "block_key",
-        _key_slot().alias("_slot"),
-        F.xxhash64("block_key").alias("_kh"),
-    )
-    keyed = keyed.withColumn(
-        "_m",
-        F.map_from_entries(F.collect_list(F.struct("_slot", "_kh")).over(w_rec)),
-    )
-    return keyed.withColumn(
-        "_vec",
-        F.transform(
-            F.sequence(F.lit(0), F.lit(n_slots - 1)),
-            lambda s: F.coalesce(
-                F.try_element_at("_m", s),
-                # filler: record-dependent, so two records' fillers (or a
-                # filler and a partner's real key hash) collide only at
-                # xxhash64 odds (~2^-64) — the same collision tolerance the
-                # engine already accepts for record ids themselves.
-                F.xxhash64(F.col(id_col), F.lit(-1), s),
-            ),
-        ),
-    ).drop("_m")
-
-
 def candidate_pairs(
-    blocks: DataFrame,
-    cfg: BlockingConfig,
-    id_col: str = "record_id",
-    stats: DataFrame | None = None,
-    emit: str = "all",
+    blocks: DataFrame, cfg: BlockingConfig, id_col: str = "record_id"
 ) -> DataFrame:
-    """Distinct candidate pairs (id_l < id_r) from capped blocks.
+    """Distinct candidate pairs (id_l < id_r) from `cap_blocks` output.
 
     Small blocks: plain equi self-join on block_key (sort-merge/shuffled-hash,
     AQE decides). Hot blocks (> salt_threshold members): salted self-join so a
     single hot key's quadratic pair generation is spread across
     `salt_buckets` reducer partitions instead of one straggler task.
 
-    emit="all" (default): every colliding key emits its pair; a final
-    dropDuplicates exchange dedupes (dup factor ~1.6x measured at sf0.1).
-    emit="lowest_slot" (round-5 experiment, VERDICT #3): each pair is
-    emitted ONLY from its lowest colliding key slot, decided at
-    pair-emission time by comparing the two records' per-slot key-hash
-    vectors — output is already distinct, so the pair-row dedupe exchange
-    (measured row-count-bound) disappears entirely, traded for one
-    record_id window over the ~10x-smaller key-row table plus wider join
-    rows. Set-equal to emit="all" (tested)."""
-    if emit == "lowest_slot":
-        blocks = with_key_vec(blocks, cfg, id_col)
+    The small/hot split is a plain filter on the `_bsize` column cap_blocks
+    attaches (post-cap block size, equal to block_stats(blocks).block_size
+    by construction), so no stats aggregation or semi/anti join runs here."""
+    small = blocks.where(F.col("_bsize") <= cfg.salt_threshold).drop("_bsize")
+    hot = blocks.where(F.col("_bsize") > cfg.salt_threshold).drop("_bsize")
 
-    def _lowest(pairs: DataFrame) -> DataFrame:
-        # keep the pair iff the FIRST slot where the two key vectors agree
-        # is the slot this very join row came from
-        first = F.array_position(
-            F.zip_with("_vl", "_vr", lambda a, b: a == b), F.lit(True)
-        )
-        return pairs.where(first == F.col("_slot").cast("bigint") + 1)
-    if stats is None and "_bsize" in blocks.columns:
-        # Round 6: cap_blocks already attached the post-cap block size as a
-        # window column over the same exchange, so the small/hot split is a
-        # plain filter — no stats aggregation, no anti/semi joins. The old
-        # broadcast-hot-keys shape re-evaluated the stats subtree (exchange
-        # + two hash-aggs over every capped key row) once per join branch
-        # side — four times in the executed plan (guide §2.4; plan diff in
-        # plans/r06/er_block_pairs_{before,after}.txt). `_bsize` equals
-        # block_stats(blocks).block_size by construction.
-        small = blocks.where(F.col("_bsize") <= cfg.salt_threshold).drop("_bsize")
-        hot = blocks.where(F.col("_bsize") > cfg.salt_threshold).drop("_bsize")
-    else:
-        # Fallback (raw key tables without _bsize, or caller-supplied stats):
-        # the hot set (post-cap size > salt_threshold) is the skew tail —
-        # tiny by construction — so broadcast it and split with semi/anti
-        # joins; zero additional shuffle of the block table.
-        if stats is None:
-            stats = block_stats(blocks)
-        blocks = blocks.drop("_bsize")
-        hot_keys = F.broadcast(
-            stats.where(F.col("block_size") > cfg.salt_threshold).select("block_key")
-        )
-        small = blocks.join(hot_keys, "block_key", "left_anti")
-        hot = blocks.join(hot_keys, "block_key", "left_semi")
-
-    vec_l = (
-        [F.col("_slot"), F.col("_vec").alias("_vl")] if emit == "lowest_slot" else []
-    )
-    vec_r = [F.col("_vec").alias("_vr")] if emit == "lowest_slot" else []
-
-    sl = small.select("block_key", F.col(id_col).alias("id_l"), *vec_l)
-    sr = small.select("block_key", F.col(id_col).alias("id_r"), *vec_r)
+    sl = small.select("block_key", F.col(id_col).alias("id_l"))
+    sr = small.select("block_key", F.col(id_col).alias("id_r"))
     small_pairs = sl.join(sr, "block_key").where(F.col("id_l") < F.col("id_r"))
 
     s = cfg.salt_buckets
@@ -270,24 +172,15 @@ def candidate_pairs(
         "block_key",
         F.col(id_col).alias("id_l"),
         H.salt(F.col(id_col), s).alias("_salt"),
-        *vec_l,
     )
     right = hot.select(
         "block_key",
         F.col(id_col).alias("id_r"),
         F.explode(F.sequence(F.lit(0), F.lit(s - 1))).alias("_salt"),
-        *vec_r,
     )
     hot_pairs = left.join(right, ["block_key", "_salt"]).where(
         F.col("id_l") < F.col("id_r")
     )
-
-    if emit == "lowest_slot":
-        # Each pair survives in exactly one (block_key, slot) join row, so
-        # the output is distinct by construction — no dedupe exchange.
-        return _lowest(small_pairs).select("id_l", "id_r").unionByName(
-            _lowest(hot_pairs).select("id_l", "id_r")
-        )
 
     # U3: the same pair appears in many bands/blockers — dedupe before scoring
     # (correctness-critical: duplicate pairs would double-count in eval).

@@ -33,6 +33,12 @@ ATTR_COLS = [
 ]
 
 
+def _broadcasts_disabled(df: DataFrame) -> bool:
+    """True in the no-broadcast regime (autoBroadcastJoinThreshold = -1)."""
+    thr = str(df.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold", "10m"))
+    return thr in ("-1", "-1b")
+
+
 def offers_with_vectors(offers: DataFrame, idf: DataFrame) -> DataFrame:
     """Attach tf-idf sparse vectors; select only what scoring needs.
 
@@ -71,10 +77,7 @@ def offers_with_vectors(offers: DataFrame, idf: DataFrame) -> DataFrame:
         "brand",
         "price",
     )
-    thr = str(
-        offers.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold", "10m")
-    )
-    if thr not in ("-1", "-1b"):
+    if not _broadcasts_disabled(offers):
         vec = F.broadcast(vec)
     return base.withColumn("n_tokens", F.size("token_hashes")).join(
         vec, "record_id", "left"
@@ -85,13 +88,13 @@ def pair_features(
     pairs: DataFrame,
     attrs: DataFrame,
     gate_jaccard: float | None = None,
-    cosine_impl: str = "auto",
-    vector_fetch: str = "auto",
 ) -> DataFrame:
     """(id_l, id_r) -> feature columns. attrs = offers_with_vectors output.
 
-    cosine_impl: "python" computes the tf-idf cosine inside the fused Arrow
-    UDF alongside JW; "jvm" computes it as a pure Catalyst expression
+    The tf-idf cosine implementation follows the session's broadcast regime.
+    With broadcasts enabled (the local/under-committed shape) it runs inside
+    the fused Arrow UDF alongside JW. With autoBroadcastJoinThreshold = -1
+    (the cgroup-capped cluster shape) it runs as a pure Catalyst expression
     (array_intersect + positional weight lookups), so the KB-wide tf-idf
     vectors never cross the Arrow boundary and the Python worker sees only
     the two title strings. Feature VALUES are identical modulo float
@@ -100,27 +103,7 @@ def pair_features(
     Python workers ride cores outside the task budget) and loses when it is
     saturated (broadcast regime local[32]: jvm −9%) or when broadcasts are
     disabled entirely (the cluster-emulation regime: jvm 197.8s vs python
-    254.7s, −22% — BENCH/BASELINE.md round-4 memo). "auto" (default) picks
-    jvm when the session disables broadcasts (cgroup-capped cluster shape),
-    python otherwise (local/under-committed shape).
-
-    vector_fetch: "twin" joins the vector table once per side; "unpivot"
-    posexplodes survivors to (pair, side, rid), joins the vector table
-    ONCE, and regroups by pair key — one vector exchange instead of two,
-    at the cost of shuffling the survivor stream with its fetched vectors.
-    Measured (fresh-JVM min-of-reps): in the BROADCAST regime twin wins
-    (sf0.1 local[32]: 18.6s vs 23.0s; a wash at sf1) — the regroup shuffle
-    costs more than the second broadcast build. In the NO-BROADCAST regime
-    (autoBroadcastJoinThreshold=-1, the shape a 10^12-record cluster is in
-    because nothing fits a broadcast: every fetch is a shuffle join) the
-    sf1 walls are a WASH (min 255.4s vs twin 254.7s — the stage is
-    dominated by the cheap-phase fetch of the full 266M-pair stream, which
-    both shapes do identically; BENCH/BASELINE.md round-4 memo). "auto"
-    (default) picks twin under broadcasts (measured winner) and unpivot
-    when broadcasts are disabled: equal measured cost on one box, but one
-    vector exchange instead of two once exchanges ride a real cluster
-    network — an analyzed tiebreak, not a measured win, and labeled as
-    such.
+    254.7s, −22% — BENCH/BASELINE.md round-4 memo).
 
     gate_jaccard: cheap-feature cascade for the scoring path. The codegen'd
     features (Jaccard/Levenshtein/price/brand) are computed for every pair;
@@ -142,19 +125,6 @@ def pair_features(
     # fetches are broadcast hash joins (zero shuffle of the pair table); at
     # 10^12 records they become storage-partitioned joins on id-bucketed
     # Iceberg tables.
-    if vector_fetch == "auto" or cosine_impl == "auto":
-        thr = str(
-            pairs.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold", "10m")
-        )
-        no_broadcast = thr in ("-1", "-1b")
-        if vector_fetch == "auto":
-            # wash on walls in both regimes at sf1; tiebreak on exchange
-            # count — unpivot does ONE shuffled vector fetch where twin does
-            # two, which is the cheaper shape once exchanges ride a real
-            # cluster network instead of one box's NVMe.
-            vector_fetch = "unpivot" if no_broadcast else "twin"
-        if cosine_impl == "auto":
-            cosine_impl = "jvm" if no_broadcast else "python"
     light_cols = ["record_id", "token_hashes", "n_tokens", "title_norm", "brand", "price"]
     vec_cols = ["record_id", "tfidf_idx", "tfidf_val"]
     # Round 6: both sides of each twin fetch join the SAME unaliased
@@ -165,7 +135,7 @@ def pair_features(
     # fetch pair; with a shared subtree, runtime exchange reuse builds it
     # once and probes it from both joins (guide §2.4 "two operations keyed
     # the same way can share one exchange"). Measured (alternated, warm,
-    # min/all of 3): cheap phase 7.21s -> 4.76s (bench_probe_reuse_ab.py).
+    # min/all of 3): cheap phase 7.21s -> 4.76s (OPTIMIZATION_r06.md).
     light = attrs.select(*light_cols)
     fl, fr = light.alias("_fl"), light.alias("_fr")
     joined = pairs.join(fl, pairs.id_l == F.col("_fl.record_id")).join(
@@ -200,48 +170,22 @@ def pair_features(
         S.relative_closeness(F.col("_fl.price"), F.col("_fr.price")).alias("price_sim"),
         S.eq_flag(F.col("_fl.brand"), F.col("_fr.brand")).alias("brand_eq"),
     )
-    if vector_fetch == "unpivot":
-        # Single-exchange variant: unpivot survivors to (pair, side, rid)
-        # rows, ONE broadcast join against the vector table, regroup by pair
-        # key — one vector exchange instead of two, at the cost of a
-        # survivor-stream shuffle that now carries the fetched vectors.
-        tagged = cheap.select(
-            "*", F.posexplode(F.array("id_l", "id_r")).alias("_side", "_rid")
+    # Same shared-subtree trick for the survivor vector fetch: one
+    # broadcast build of the vector table, probed from both sides.
+    vec = attrs.select(*vec_cols)
+    vl, vr = vec.alias("_vl"), vec.alias("_vr")
+    full = (
+        cheap.join(vl, cheap.id_l == F.col("_vl.record_id"), "left")
+        .join(vr, cheap.id_r == F.col("_vr.record_id"), "left")
+        .select(
+            cheap["*"],
+            F.col("_vl.tfidf_idx").alias("l_tfidf_idx"),
+            F.col("_vl.tfidf_val").alias("l_tfidf_val"),
+            F.col("_vr.tfidf_idx").alias("r_tfidf_idx"),
+            F.col("_vr.tfidf_val").alias("r_tfidf_val"),
         )
-        fetched = tagged.join(
-            attrs.select(*vec_cols), tagged._rid == attrs.record_id, "left"
-        )
-        carry = [c for c in cheap.columns if c not in ("id_l", "id_r")]
-
-        def _side(side: int, col: str):
-            return F.first(
-                F.when(F.col("_side") == side, F.col(col)), ignorenulls=True
-            )
-
-        full = fetched.groupBy("id_l", "id_r").agg(
-            *[F.first(c).alias(c) for c in carry],
-            _side(0, "tfidf_idx").alias("l_tfidf_idx"),
-            _side(0, "tfidf_val").alias("l_tfidf_val"),
-            _side(1, "tfidf_idx").alias("r_tfidf_idx"),
-            _side(1, "tfidf_val").alias("r_tfidf_val"),
-        )
-    else:
-        # Same shared-subtree trick for the survivor vector fetch: one
-        # broadcast build of the vector table, probed from both sides.
-        vec = attrs.select(*vec_cols)
-        vl, vr = vec.alias("_vl"), vec.alias("_vr")
-        full = (
-            cheap.join(vl, cheap.id_l == F.col("_vl.record_id"), "left")
-            .join(vr, cheap.id_r == F.col("_vr.record_id"), "left")
-            .select(
-                cheap["*"],
-                F.col("_vl.tfidf_idx").alias("l_tfidf_idx"),
-                F.col("_vl.tfidf_val").alias("l_tfidf_val"),
-                F.col("_vr.tfidf_idx").alias("r_tfidf_idx"),
-                F.col("_vr.tfidf_val").alias("r_tfidf_val"),
-            )
-        )
-    if cosine_impl == "jvm":
+    )
+    if _broadcasts_disabled(pairs):
         return full.select(
             "id_l",
             "id_r",

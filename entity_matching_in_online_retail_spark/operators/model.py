@@ -20,11 +20,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.ml.classification import (
-    GBTClassifier,
-    LogisticRegression,
-    RandomForestClassifier,
-)
+from pyspark.ml.classification import LogisticRegression
 from pyspark.ml.feature import VectorAssembler
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -44,140 +40,6 @@ class LinearMatcher:
         for c, w in zip(self.feature_cols, self.coefficients):
             z = z + F.coalesce(F.col(c), F.lit(0.0)) * float(w)
         return 1.0 / (1.0 + F.exp(-z))
-
-
-@dataclass(frozen=True)
-class TreeMatcher:
-    """Fitted gradient-boosted trees as a portable plain-Python structure
-    (reference parity: the reference also tried tree ensembles alongside LR).
-
-    Each tree node is a nested tuple — ("leaf", value) or
-    ("split", feature_index, threshold, left, right) — JSON-serializable like
-    LinearMatcher. score_expr folds the whole ensemble into nested
-    when/otherwise literals: scoring stays whole-stage-codegen'd JVM
-    arithmetic with zero Python, exactly like the linear fold.
-
-    kind="gbt": leaf values are regression margins, P(1) = sigmoid(2*sum(w*t)).
-    kind="rf":  leaf values are per-tree class-1 probabilities (normalized
-    impurity counts), P(1) = mean over trees — Spark's own RF predictRaw
-    (unweighted per-tree vote) reproduced exactly."""
-
-    feature_cols: tuple[str, ...]
-    trees: tuple  # ((weight, node), ...)
-    kind: str = "gbt"
-
-    def _node_expr(self, node) -> Column:
-        if node[0] == "leaf":
-            return F.lit(float(node[1]))
-        _, fi, thr, left, right = node
-        feat = F.coalesce(F.col(self.feature_cols[fi]), F.lit(0.0))
-        return F.when(feat <= F.lit(float(thr)), self._node_expr(left)).otherwise(
-            self._node_expr(right)
-        )
-
-    def score_expr(self) -> Column:
-        raw = F.lit(0.0)
-        for w, node in self.trees:
-            raw = raw + float(w) * self._node_expr(node)
-        if self.kind == "rf":
-            return raw / float(len(self.trees))
-        # Spark GBT logistic loss: margin = 2 * F(x); P(1) = sigmoid(margin)
-        return 1.0 / (1.0 + F.exp(-2.0 * raw))
-
-
-def _extract_tree(jnode):
-    """pyspark.ml tree -> plain tuples (continuous splits only; all our
-    features are doubles so categorical splits cannot occur)."""
-    if jnode.getClass().getSimpleName().endswith("InternalNode"):
-        split = jnode.split()
-        return (
-            "split",
-            int(split.featureIndex()),
-            float(split.threshold()),
-            _extract_tree(jnode.leftChild()),
-            _extract_tree(jnode.rightChild()),
-        )
-    return ("leaf", float(jnode.prediction()))
-
-
-def train_tree_matcher(
-    features: DataFrame,
-    feature_cols: tuple[str, ...],
-    label_col: str = "label",
-    max_iter: int = 20,
-    max_depth: int = 3,
-    seed: int = 42,
-) -> TreeMatcher:
-    """M1-alt: fit a GBTClassifier (distributed), extract to TreeMatcher."""
-    assembled = VectorAssembler(
-        inputCols=list(feature_cols), outputCol="_fv", handleInvalid="keep"
-    ).transform(
-        features.select(
-            *[F.coalesce(F.col(c), F.lit(0.0)).alias(c) for c in feature_cols],
-            F.col(label_col).cast("double").alias(label_col),
-        )
-    )
-    m = GBTClassifier(
-        featuresCol="_fv",
-        labelCol=label_col,
-        maxIter=max_iter,
-        maxDepth=max_depth,
-        seed=seed,
-    ).fit(assembled)
-    trees = tuple(
-        (float(w), _extract_tree(t._call_java("rootNode")))
-        for w, t in zip(m.treeWeights, m.trees)
-    )
-    return TreeMatcher(feature_cols=tuple(feature_cols), trees=trees)
-
-
-def _extract_tree_prob(jnode):
-    """Like _extract_tree but leaves carry the class-1 probability
-    (normalized impurity counts) — what Spark's RF predictRaw votes with."""
-    if jnode.getClass().getSimpleName().endswith("InternalNode"):
-        split = jnode.split()
-        return (
-            "split",
-            int(split.featureIndex()),
-            float(split.threshold()),
-            _extract_tree_prob(jnode.leftChild()),
-            _extract_tree_prob(jnode.rightChild()),
-        )
-    stats = list(jnode.impurityStats().stats())
-    total = float(sum(stats))
-    return ("leaf", float(stats[1]) / total if total > 0 else 0.0)
-
-
-def train_rf_matcher(
-    features: DataFrame,
-    feature_cols: tuple[str, ...],
-    label_col: str = "label",
-    n_trees: int = 20,
-    max_depth: int = 5,
-    seed: int = 42,
-) -> TreeMatcher:
-    """M1-alt: fit a RandomForestClassifier (distributed), fold to plan
-    literals. P(1) = mean over trees of the leaf class-1 probability —
-    exactly RandomForestClassificationModel.predictRaw normalized."""
-    assembled = VectorAssembler(
-        inputCols=list(feature_cols), outputCol="_fv", handleInvalid="keep"
-    ).transform(
-        features.select(
-            *[F.coalesce(F.col(c), F.lit(0.0)).alias(c) for c in feature_cols],
-            F.col(label_col).cast("double").alias(label_col),
-        )
-    )
-    m = RandomForestClassifier(
-        featuresCol="_fv",
-        labelCol=label_col,
-        numTrees=n_trees,
-        maxDepth=max_depth,
-        seed=seed,
-    ).fit(assembled)
-    trees = tuple(
-        (1.0, _extract_tree_prob(t._call_java("rootNode"))) for t in m.trees
-    )
-    return TreeMatcher(feature_cols=tuple(feature_cols), trees=trees, kind="rf")
 
 
 def split_train_val(labeled: DataFrame, train_pct: int = 80) -> tuple[DataFrame, DataFrame]:
@@ -213,9 +75,7 @@ def train_matcher(
     )
 
 
-def score_pairs(
-    pair_features: DataFrame, model: "LinearMatcher | TreeMatcher"
-) -> DataFrame:
+def score_pairs(pair_features: DataFrame, model: LinearMatcher) -> DataFrame:
     return pair_features.withColumn("score", model.score_expr())
 
 

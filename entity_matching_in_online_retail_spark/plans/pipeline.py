@@ -112,9 +112,9 @@ class ERPipeline:
             # pattern) was implemented and measured-REJECTED: CollectMetrics
             # evaluates its accumulator expressions per row in interpreted
             # mode, which on the 20M-row pairs / 1.3M-row scores writes cost
-            # ~3s (scores stage A/B: 14.1s vs 11.1s min, bench_probe_
-            # obswrite_ab.py) — more than the ~0.4-1.1s columnar re-read job
-            # it replaces. The separate codegen'd metrics pass stays.
+            # ~3s (scores stage A/B: 14.1s vs 11.1s min, OPTIMIZATION_r06.md)
+            # — more than the ~0.4-1.1s columnar re-read job it replaces.
+            # The separate codegen'd metrics pass stays.
             written = self.catalog.read(stage).where(
                 F.col("part_id").isin([int(p) for p in pending])
             )

@@ -1,8 +1,9 @@
 """SparkSession factory with scale-aware defaults.
 
-Local-mode knobs are chosen for the sandbox (single JVM, up to 32 threads,
-125 GB RAM); on a real cluster the same builder runs under spark-submit with
-the master/memory supplied externally and only the SQL confs below matter.
+Local-mode knobs are sized from the host (single JVM, $SPARK_GRAFT_CPUS
+threads, a driver heap of about half the physical memory); on a real cluster
+the same builder runs under spark-submit with the master/memory supplied
+externally and only the SQL confs below matter.
 """
 
 from __future__ import annotations
@@ -10,6 +11,22 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+MAX_DRIVER_MEM_MB = 48 * 1024
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """About half of MemTotal, capped at 48g; the cap alone where the
+    meminfo file is unreadable (non-Linux hosts)."""
+    try:
+        with open(meminfo) as f:
+            total_kb = next(
+                int(line.split()[1]) for line in f if line.startswith("MemTotal:")
+            )
+    except (OSError, StopIteration, ValueError, IndexError):
+        return f"{MAX_DRIVER_MEM_MB}m"
+    return f"{min(total_kb // 2048, MAX_DRIVER_MEM_MB)}m"
 
 
 def get_spark(
@@ -24,7 +41,10 @@ def get_spark(
     cores: local[N] thread count; default $SPARK_GRAFT_CPUS or all cores.
     shuffle_partitions: default 2x cores (AQE coalesces down at runtime).
     master: override (e.g. "local-cluster[4,8,16384]" for multi-executor-JVM
-    scaling runs; executors then need PYTHONPATH to this repo).
+    scaling runs).
+    Driver memory: $SPARK_DRIVER_MEM, else default_driver_memory().
+    Python workers get this repo on PYTHONPATH, so UDFs import the package
+    whatever the working directory.
     """
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
@@ -47,17 +67,18 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "20000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory(),
+        )
+        .config("spark.executorEnv.PYTHONPATH", REPO_ROOT)
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Dio.netty.tryReflectionSetAccessible=true")
     )
     if master and master.startswith("local-cluster"):
         mem_mb = master.split(",")[2].rstrip("]")
-        repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        builder = (
-            builder.config("spark.executor.memory", f"{mem_mb}m")
-            .config("spark.executorEnv.PYTHONPATH", repo_root)
-            .config("spark.driver.memory", "8g")
+        builder = builder.config("spark.executor.memory", f"{mem_mb}m").config(
+            "spark.driver.memory", "8g"
         )
     if extra_conf:
         for k, v in extra_conf.items():

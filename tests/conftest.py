@@ -11,7 +11,7 @@ from entity_matching_in_online_retail_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("em_tests", cores=8, shuffle_partitions=8)
+    s = get_spark("em_tests")
     yield s
     s.stop()
 

@@ -2,6 +2,7 @@
 equivalence (J7 vs plain J1 must produce the same pair set)."""
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from entity_matching_in_online_retail_spark.config import BlockingConfig
@@ -40,7 +41,7 @@ def test_lsh_band_count(spark):
 
 
 def test_cap_blocks(spark):
-    cfg = BlockingConfig(block_cap=3)
+    cfg = BlockingConfig(block_cap=3, salt_threshold=2)
     blocks = spark.createDataFrame(
         [("k", i) for i in range(10)] + [("k2", 1)], "block_key string, record_id long"
     )
@@ -69,7 +70,7 @@ def test_salted_pairs_equal_plain_pairs(spark):
     rows = [("hot", i) for i in range(40)] + [("cold", i) for i in range(100, 105)]
     blocks = spark.createDataFrame(rows, "block_key string, record_id long")
     cfg = BlockingConfig(salt_threshold=10, salt_buckets=4, block_cap=1000)
-    got = B.candidate_pairs(blocks, cfg)
+    got = B.candidate_pairs(B.cap_blocks(blocks, cfg), cfg)
 
     naive = (
         blocks.alias("l")
@@ -125,24 +126,14 @@ def test_record_ids_are_full_width_no_pair_packing(spark, tiny_spark):
     assert stats["lo"] < -(2**31) or stats["hi"] >= 2**31
 
 
-def test_lowest_slot_pairs_equal_all_pairs(spark, tiny_spark):
-    """Round-5 experiment (VERDICT #3): emit="lowest_slot" suppresses every
-    duplicate pair emission at join time (pair kept only from its lowest
-    colliding key slot), so its output must be (a) the exact pair SET of
-    emit="all" and (b) already distinct without any dedupe exchange."""
-    from entity_matching_in_online_retail_spark.config import DEFAULT_CONFIG
-    from entity_matching_in_online_retail_spark.operators.normalize import (
-        normalize_web_pages,
-    )
-
-    pages, _, _ = tiny_spark
-    offers = normalize_web_pages(pages, lang="en", use_html=True).cache()
-    cfg = DEFAULT_CONFIG.blocking
-    capped = B.cap_blocks(B.all_block_keys(offers, cfg), cfg).localCheckpoint()
-    base = B.candidate_pairs(capped, cfg, emit="all")
-    low = B.candidate_pairs(capped, cfg, emit="lowest_slot")
-    n_low = low.count()
-    assert n_low == low.dropDuplicates(["id_l", "id_r"]).count()  # distinct
-    assert n_low == base.count()
-    assert low.exceptAll(base).count() == 0
-    assert base.exceptAll(low).count() == 0
+def test_blocking_config_rejects_inconsistent_values():
+    """A cap at or below the salt threshold would silently disable salting
+    (the small/hot split reads the post-cap size), and a signature length
+    other than bands x rows would leave signature rows out of every band."""
+    for cap, thr in ((50, 50), (20, 50)):
+        with pytest.raises(ValueError, match="block_cap"):
+            BlockingConfig(block_cap=cap, salt_threshold=thr)
+    with pytest.raises(ValueError, match="minhash_k"):
+        BlockingConfig(minhash_k=64, lsh_bands=16, lsh_rows=2)
+    BlockingConfig(block_cap=51, salt_threshold=50)  # boundary: valid
+    BlockingConfig(minhash_k=32, lsh_bands=16, lsh_rows=2)

@@ -37,90 +37,6 @@ def test_train_separable(spark):
     assert errs <= 2
 
 
-def test_tree_matcher_fold_equals_mllib_probability(spark):
-    """The plan-literal fold of the GBT ensemble must reproduce pyspark.ml's
-    own probability column exactly (and with zero Python in the plan)."""
-    import numpy as np
-
-    rng = np.random.default_rng(11)
-    rows = []
-    for _ in range(400):
-        x1, x2 = float(rng.uniform()), float(rng.uniform())
-        label = int(x1 + 0.5 * x2 + rng.normal(0, 0.05) > 0.7)
-        rows.append((x1, x2, label))
-    df = spark.createDataFrame(rows, "f1 double, f2 double, label int")
-    tm = M.train_tree_matcher(df, ("f1", "f2"), max_iter=10, max_depth=3)
-
-    # reference probabilities from the fitted mllib model itself
-    from pyspark.ml.classification import GBTClassifier
-    from pyspark.ml.feature import VectorAssembler
-
-    assembled = VectorAssembler(inputCols=["f1", "f2"], outputCol="_fv").transform(
-        df.withColumn("label", F.col("label").cast("double"))
-    )
-    m = GBTClassifier(
-        featuresCol="_fv", labelCol="label", maxIter=10, maxDepth=3, seed=42
-    ).fit(assembled)
-    ref = [float(r["probability"][1]) for r in m.transform(assembled).collect()]
-    got = [r["score"] for r in M.score_pairs(df, tm).collect()]
-    assert got == pytest.approx(ref, abs=1e-9)
-
-    # the fold stays JVM-side: no Python eval nodes in the scoring plan
-    plan = M.score_pairs(df, tm)._jdf.queryExecution().executedPlan().toString()
-    assert "EvalPython" not in plan
-
-    # and it actually separates the fixture
-    preds = M.score_pairs(df, tm).withColumn("pred", (F.col("score") >= 0.5).cast("int"))
-    errs = preds.where(F.col("pred") != F.col("label")).count()
-    assert errs <= 20
-
-
-def test_rf_matcher_fold_equals_mllib_probability(spark):
-    """The plan-literal fold of the RandomForest must reproduce pyspark.ml's
-    probability column exactly (unweighted per-tree vote, normalized leaf
-    impurity counts), with zero Python in the plan."""
-    import numpy as np
-
-    rng = np.random.default_rng(13)
-    rows = []
-    for _ in range(400):
-        x1, x2 = float(rng.uniform()), float(rng.uniform())
-        label = int(x1 + 0.5 * x2 + rng.normal(0, 0.05) > 0.7)
-        rows.append((x1, x2, label))
-    df = spark.createDataFrame(rows, "f1 double, f2 double, label int")
-    tm = M.train_rf_matcher(df, ("f1", "f2"), n_trees=10, max_depth=4)
-    assert tm.kind == "rf" and len(tm.trees) == 10
-
-    from pyspark.ml.classification import RandomForestClassifier
-    from pyspark.ml.feature import VectorAssembler
-
-    assembled = VectorAssembler(inputCols=["f1", "f2"], outputCol="_fv").transform(
-        df.withColumn("label", F.col("label").cast("double"))
-    )
-    m = RandomForestClassifier(
-        featuresCol="_fv", labelCol="label", numTrees=10, maxDepth=4, seed=42
-    ).fit(assembled)
-    # .copy() drops the training summary. The summary captures the
-    # SparkSession, and once ANY Dataset.observe() has run in the session
-    # (connected_components does — see operators/cluster.py) the session's
-    # lazily-initialized ObservationManager is non-null and not
-    # serializable, so transform() of a summary-carrying model throws
-    # "Task not serializable". Spark 4.1 quirk; GBT models carry no
-    # summary, which is why only this RF reference path needs the copy.
-    ref = [
-        float(r["probability"][1]) for r in m.copy().transform(assembled).collect()
-    ]
-    got = [r["score"] for r in M.score_pairs(df, tm).collect()]
-    assert got == pytest.approx(ref, abs=1e-9)
-
-    plan = M.score_pairs(df, tm)._jdf.queryExecution().executedPlan().toString()
-    assert "EvalPython" not in plan
-
-    preds = M.score_pairs(df, tm).withColumn("pred", (F.col("score") >= 0.5).cast("int"))
-    errs = preds.where(F.col("pred") != F.col("label")).count()
-    assert errs <= 20
-
-
 def test_threshold_sweep(spark):
     # scores: positives at >= .8, negatives at <= .3 → any tau in (.3,.8) gives F1=1
     rows = [(0.9, 1), (0.85, 1), (0.8, 1), (0.3, 0), (0.2, 0), (0.1, 0)]

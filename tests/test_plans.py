@@ -77,10 +77,12 @@ def test_scoring_plan_shape(spark, tiny_spark, tmp_path_factory):
 
 
 def test_pair_features_variants_equivalent(spark, tiny_spark):
-    """cosine_impl jvm/python and vector_fetch twin/unpivot must produce
-    identical feature rows (cosine differs only by float summation order);
-    the jvm plan computes the cosine via array_intersect with NO second
-    Python node, and the unpivot plan carries ONE vector broadcast join."""
+    """The python (broadcast regime) and jvm (broadcasts disabled) tf-idf
+    cosine must produce identical feature rows (cosine differs only by float
+    summation order); the jvm plan computes the cosine via array_intersect
+    with NO second Python node, and both regimes fetch vectors twin-style."""
+    import re
+
     from entity_matching_in_online_retail_spark.operators.normalize import (
         normalize_web_pages,
     )
@@ -96,52 +98,31 @@ def test_pair_features_variants_equivalent(spark, tiny_spark):
     cols = ["id_l", "id_r", "jaccard", "lev_sim", "jw_sim", "tfidf_cos",
             "price_sim", "brand_eq"]
 
-    def rows(**kw):
-        df = FE.pair_features(pairs, attrs, gate_jaccard=0.15, **kw).select(cols)
+    def rows():
+        df = FE.pair_features(pairs, attrs, gate_jaccard=0.15).select(cols)
         return {
             (r["id_l"], r["id_r"]): [round(float(r[c]), 9) for c in cols[2:]]
             for r in df.collect()
         }
 
+    # 2 light + 2 vector joins in both regimes (counted strategy-agnostically:
+    # AQE may print SMJ before runtime broadcast conversion)
+    join_re = r"\(\d+\) (?:BroadcastHashJoin|ShuffledHashJoin|SortMergeJoin)"
     base = rows()
     assert base  # the gate must leave something to compare
-    for kw in ({"cosine_impl": "jvm"}, {"vector_fetch": "unpivot"},
-               {"cosine_impl": "jvm", "vector_fetch": "unpivot"}):
-        got = rows(**kw)
-        assert got == base, kw
-
-    import re
-
-    jvm_plan = plan_of(
-        FE.pair_features(pairs, attrs, gate_jaccard=0.15, cosine_impl="jvm")
-    )
+    py_plan = plan_of(FE.pair_features(pairs, attrs, gate_jaccard=0.15))
+    assert "array_intersect(tfidf_idx" not in py_plan
+    assert len(re.findall(join_re, py_plan)) == 4
+    thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        assert rows() == base
+        jvm_plan = plan_of(FE.pair_features(pairs, attrs, gate_jaccard=0.15))
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
     assert len(re.findall(r"\(\d+\) ArrowEvalPython", jvm_plan)) == 1
-    assert "array_intersect" in jvm_plan
-    # twin: 2 light + 2 vector joins = 4; unpivot: 2 light + 1 vector = 3
-    # (counted strategy-agnostically: AQE may print SMJ before runtime
-    # broadcast conversion depending on when stats materialize)
-    join_re = r"\(\d+\) (?:BroadcastHashJoin|ShuffledHashJoin|SortMergeJoin)"
-    twin_plan = plan_of(FE.pair_features(pairs, attrs, gate_jaccard=0.15))
-    unp_plan = plan_of(
-        FE.pair_features(pairs, attrs, gate_jaccard=0.15, vector_fetch="unpivot")
-    )
-    assert len(re.findall(join_re, twin_plan)) == 4
-    assert len(re.findall(join_re, unp_plan)) == 3
-    assert "Generate" in unp_plan  # the posexplode unpivot
-
-
-def test_candidate_pairs_broadcasts_hot_keys(spark):
-    """The small/hot split must broadcast the hot-key set (semi/anti), never
-    shuffle the full block table against stats."""
-    from entity_matching_in_online_retail_spark.config import DEFAULT_CONFIG
-    from entity_matching_in_online_retail_spark.operators import blocking as B
-
-    blocks = spark.createDataFrame(
-        [(i, f"k{i % 5}") for i in range(100)], "record_id long, block_key string"
-    )
-    plan = plan_of(B.candidate_pairs(blocks, DEFAULT_CONFIG.blocking))
-    assert "BroadcastHashJoin LeftSemi" in plan
-    assert "BroadcastHashJoin LeftAnti" in plan
+    assert "array_intersect(tfidf_idx" in jvm_plan
+    assert len(re.findall(join_re, jvm_plan)) == 4
 
 
 def test_lsh_topk_single_corpus_scan(spark):
@@ -160,21 +141,6 @@ def test_lsh_topk_single_corpus_scan(spark):
     assert n_scans <= 5, f"{n_scans} corpus scans (single-pass regression)"
     assert len(re.findall(r"\(\d+\) Generate", plan)) >= 2  # posexplode both sides
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-
-def test_tree_matcher_plan_is_literal_case_tree(spark):
-    """GBT fold: the scoring plan is pure conditional arithmetic (CASE WHEN
-    thresholds as literals), no Python, no mllib transform."""
-    from entity_matching_in_online_retail_spark.operators import model as M2
-
-    tm = M2.TreeMatcher(
-        feature_cols=("jaccard",),
-        trees=((1.0, ("split", 0, 0.5, ("leaf", -1.0), ("leaf", 1.0))),),
-    )
-    df = spark.createDataFrame([(0.3,), (0.9,)], "jaccard double")
-    plan = plan_of(M2.score_pairs(df, tm), "extended")
-    assert "CASE WHEN" in plan and "0.5" in plan
-    assert "EvalPython" not in plan
 
 
 def test_tfidf_scan_pruned_in_cheap_phase(spark, tiny_spark, tmp_path_factory):
@@ -276,33 +242,6 @@ def test_bucketed_attrs_join_avoids_attrs_exchange(spark, tiny_spark, tmp_path):
     finally:
         spark.sql("DROP TABLE IF EXISTS buckdb.attrs_bucketed")
         spark.sql("DROP DATABASE IF EXISTS buckdb")
-
-
-def test_vector_fetch_auto_follows_broadcast_regime(spark, tiny_spark):
-    """vector_fetch='auto' must resolve to the measured per-regime winner:
-    twin fetches under the broadcast threshold, the single-exchange unpivot
-    shape when broadcasts are disabled (the 10^12-record cluster regime)."""
-    from entity_matching_in_online_retail_spark.functions import similarity as S
-    from entity_matching_in_online_retail_spark.operators import features as FE
-    from entity_matching_in_online_retail_spark.operators.normalize import (
-        normalize_web_pages,
-    )
-
-    pages, _, _ = tiny_spark
-    offers = normalize_web_pages(pages, lang="en", use_html=True)
-    attrs = FE.offers_with_vectors(offers, S.fit_idf(offers))
-    pairs = offers.select(F.col("record_id").alias("id_l")).limit(3).crossJoin(
-        offers.select(F.col("record_id").alias("id_r")).limit(3)
-    )
-    plan_bc = plan_of(FE.pair_features(pairs, attrs))
-    assert "posexplode" not in plan_bc.lower()  # twin under broadcasts
-    thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        plan_nobc = plan_of(FE.pair_features(pairs, attrs))
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
-    assert "posexplode" in plan_nobc.lower()  # unpivot when nothing broadcasts
 
 
 def test_incremental_pairs_fast_path_no_corpus_scan(spark, tiny_spark):

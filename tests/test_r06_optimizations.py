@@ -3,7 +3,7 @@
 Each test pins an operator-internal rewrite to its legacy semantics:
   - fused single-scan all_block_keys  == 4-branch union (exact multiset)
   - cap_blocks' window _bsize         == block_stats block_size
-  - candidate_pairs _bsize filter path == stats broadcast-join path
+  - candidate_pairs _bsize filter path == naive distinct self-join
   - fused extract_nfkc UDF            == extract_text + nfkc (byte identity)
   - checkpoint manifest metrics       == recomputed from the written data
   - offers_with_vectors broadcast-regime hint changes the join strategy only
@@ -81,7 +81,7 @@ def test_cap_blocks_bsize_equals_block_stats(spark, offers):
     assert bad == 0
 
 
-def test_candidate_pairs_bsize_path_equals_stats_path(spark, offers):
+def test_candidate_pairs_bsize_path_equals_naive_self_join(spark, offers):
     # salt_threshold lowered so BOTH the small and the hot/salted branch are
     # exercised on the tiny corpus (its post-cap blocks are all < 50).
     from entity_matching_in_online_retail_spark.config import BlockingConfig
@@ -91,11 +91,18 @@ def test_candidate_pairs_bsize_path_equals_stats_path(spark, offers):
     assert capped.where(F.col("_bsize") > cfg.salt_threshold).count() > 0
     assert capped.where(F.col("_bsize") <= cfg.salt_threshold).count() > 0
     via_bsize = B.candidate_pairs(capped, cfg)
-    via_stats = B.candidate_pairs(
-        capped.drop("_bsize"), cfg, stats=B.block_stats(capped)
+    keys = capped.select("block_key", "record_id")
+    naive = (
+        keys.alias("l")
+        .join(keys.alias("r"), "block_key")
+        .where(F.col("l.record_id") < F.col("r.record_id"))
+        .select(
+            F.col("l.record_id").alias("id_l"), F.col("r.record_id").alias("id_r")
+        )
+        .distinct()
     )
     assert _multiset(via_bsize, ["id_l", "id_r"]) == _multiset(
-        via_stats, ["id_l", "id_r"]
+        naive, ["id_l", "id_r"]
     )
 
 
