@@ -66,6 +66,14 @@ class ScoringConfig:
     # TF-IDF hashing dimensionality for the cosine feature.
     tfidf_min_df: int = 1
 
+    def __post_init__(self) -> None:
+        # Both are compared against probabilities / Jaccard values in [0, 1];
+        # outside it the gate drops every pair or none, silently.
+        for name in ("gate_jaccard", "threshold"):
+            v = getattr(self, name)
+            if not 0 <= v <= 1:
+                raise ValueError(f"{name} ({v}) must lie in [0, 1]")
+
 
 @dataclass(frozen=True)
 class PipelineConfig:

@@ -305,28 +305,13 @@ def sparse_cosine_udf(
 # --------------------------------------------------------------------------
 
 
-_PAIR_SCORES_SCHEMA = T.StructType(
-    [
-        T.StructField("jw_sim", T.DoubleType()),
-        T.StructField("tfidf_cos", T.DoubleType()),
-    ]
-)
-
-
-@F.pandas_udf(_PAIR_SCORES_SCHEMA)
-def pair_scores_udf(
-    a: pd.Series,
-    b: pd.Series,
-    idx_l: pd.Series,
-    val_l: pd.Series,
-    idx_r: pd.Series,
-    val_r: pd.Series,
-) -> pd.DataFrame:
+def _factorized_jw(a: pd.Series, b: pd.Series) -> np.ndarray:
+    """Jaro-Winkler per row; 0.0 where either side is null. Factorizes to
+    unique pairs first (same-entity members share titles, so batches are
+    duplicate-heavy), then makes one vectorized batch JW call."""
     n = len(a)
     jw = np.zeros(n)
     av, bv = a.to_numpy(dtype=object), b.to_numpy(dtype=object)
-    # Factorize to unique pairs (same-entity members share titles, so
-    # batches are duplicate-heavy), then one vectorized batch JW call.
     pair_code: dict[tuple, int] = {}
     code = np.full(n, -1, dtype=np.int64)
     ua: list[str] = []
@@ -347,6 +332,28 @@ def pair_scores_udf(
         uj = jaro_winkler_batch(ua, ub)
         valid = code >= 0
         jw[valid] = uj[code[valid]]
+    return jw
+
+
+_PAIR_SCORES_SCHEMA = T.StructType(
+    [
+        T.StructField("jw_sim", T.DoubleType()),
+        T.StructField("tfidf_cos", T.DoubleType()),
+    ]
+)
+
+
+@F.pandas_udf(_PAIR_SCORES_SCHEMA)
+def pair_scores_udf(
+    a: pd.Series,
+    b: pd.Series,
+    idx_l: pd.Series,
+    val_l: pd.Series,
+    idx_r: pd.Series,
+    val_r: pd.Series,
+) -> pd.DataFrame:
+    n = len(a)
+    jw = _factorized_jw(a, b)
 
     # Per-row searchsorted loop, KEPT ON MEASUREMENT over a whole-batch
     # rank-compacted kernel (unique -> (row, rank) int64 keys -> one global
@@ -382,32 +389,9 @@ def pair_scores_udf(
 
 @F.pandas_udf(T.DoubleType())
 def jw_pairs_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Factorized batch Jaro-Winkler (same dedupe trick as pair_scores_udf)
-    for plans that compute the cosine JVM-side and only need JW from Python."""
-    n = len(a)
-    jw = np.zeros(n)
-    av, bv = a.to_numpy(dtype=object), b.to_numpy(dtype=object)
-    pair_code: dict[tuple, int] = {}
-    code = np.full(n, -1, dtype=np.int64)
-    ua: list[str] = []
-    ub: list[str] = []
-    for i in range(n):
-        x, y = av[i], bv[i]
-        if x is None or y is None:
-            continue
-        k = (x, y)
-        c = pair_code.get(k)
-        if c is None:
-            c = len(ua)
-            pair_code[k] = c
-            ua.append(x)
-            ub.append(y)
-        code[i] = c
-    if ua:
-        uj = jaro_winkler_batch(ua, ub)
-        valid = code >= 0
-        jw[valid] = uj[code[valid]]
-    return pd.Series(jw)
+    """Factorized batch Jaro-Winkler (same kernel as pair_scores_udf) for
+    plans that compute the cosine JVM-side and only need JW from Python."""
+    return pd.Series(_factorized_jw(a, b))
 
 
 def sparse_cosine_expr(

@@ -1,10 +1,14 @@
 """Incremental-append core: batch layout, crash recovery, compaction.
 
-The library half of jobs/run_append.py (which remains the spark-submit CLI
-and re-exports everything here for backward compatibility); also the engine
-behind streaming/append_stream.py, where each micro-batch of a crawl stream
-is resolved through the same append_batch. See the run_append module
-docstring for the full O(increment) / crash-safety / compaction contract.
+The library half of jobs/run_append.py (the spark-submit CLI, which imports
+only what it calls from here); also the engine behind
+streaming/append_stream.py, where each micro-batch of a crawl stream is
+resolved through the same append_batch. See the run_append module docstring
+for the full O(increment) / crash-safety / compaction contract.
+
+The stage layout itself (part_id keys, marker metrics, JSON commits) belongs
+to sources/manifest.py and model.json to plans/pipeline.py; this module
+calls them.
 """
 
 from __future__ import annotations
@@ -18,13 +22,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_CONFIG, PipelineConfig
-from ..functions import similarity as S
 from ..operators import blocking as B
 from ..operators import features as FE
 from ..operators import incremental as INC
-from ..operators import model as M
 from ..operators.normalize import normalize_web_pages
 from ..sources import manifest as MF
+from .pipeline import load_model
 
 OFFER_COLS = [
     "record_id", "url", "domain", "warc_ts", "lang", "text",
@@ -113,20 +116,20 @@ def _load_known_offers(spark: SparkSession, workdir: str) -> tuple[DataFrame, Da
     return base, all_offers
 
 
-def _load_artifacts(
-    spark: SparkSession, workdir: str, base_offers: DataFrame
-) -> tuple[DataFrame, DataFrame | None]:
-    """(frozen idf, base block_keys or None) — persisted by the base run's
-    stage_attrs/stage_pairs; refit fallback keeps pre-round-4 workdirs
-    usable (at the documented O(corpus) cost)."""
-    idf_path = os.path.join(workdir, "idf")
-    if os.path.isdir(idf_path):
-        idf = spark.read.parquet(idf_path)
-    else:
-        idf = S.fit_idf(base_offers)
-    keys_path = os.path.join(workdir, "block_keys")
-    base_keys = spark.read.parquet(keys_path) if os.path.isdir(keys_path) else None
-    return idf, base_keys
+def _load_artifacts(spark: SparkSession, workdir: str) -> tuple[DataFrame, DataFrame]:
+    """(frozen idf, base block_keys), persisted by the base run's
+    stage_attrs / stage_pairs. A workdir without them raises ValueError
+    naming the missing artifact."""
+    for name in ("idf", "block_keys"):
+        if not os.path.isdir(os.path.join(workdir, name)):
+            raise ValueError(
+                f"workdir {workdir!r} has no {name}/ artifact; rebuild it "
+                "with a full pipeline run"
+            )
+    return (
+        spark.read.parquet(os.path.join(workdir, "idf")),
+        spark.read.parquet(os.path.join(workdir, "block_keys")),
+    )
 
 
 # ------------------------------------------------------------------ append
@@ -145,14 +148,11 @@ def append_batch(
     _recover_compaction(workdir)
     base_offers, known_offers = _load_known_offers(spark, workdir)
     old_clusters = spark.read.parquet(os.path.join(workdir, "clusters"))
-    with open(os.path.join(workdir, "model.json")) as f:
-        saved = json.load(f)
-    matcher = M.LinearMatcher(
-        tuple(saved["feature_cols"]), tuple(saved["coefficients"]),
-        float(saved["intercept"]),
-    )
-    tau = float(saved["threshold"])
-    idf, base_keys = _load_artifacts(spark, workdir, base_offers)
+    saved = load_model(workdir)
+    if saved is None:
+        raise ValueError(f"workdir {workdir!r} has no model.json")
+    matcher, tau = saved
+    idf, base_keys = _load_artifacts(spark, workdir)
 
     incoming = (
         normalize_web_pages(new_pages, lang=cfg.lang_filter, use_html=use_html)
@@ -209,18 +209,16 @@ def append_batch(
     old_attrs = attrs_store.join(new_ids, "record_id", "left_anti")
 
     old_keys = base_keys
-    if old_keys is not None:
-        inc_keys = _read_increments(spark, workdir, "block_keys")
-        if inc_keys is not None:
-            old_keys = old_keys.select("record_id", "block_key").unionByName(
-                inc_keys.select("record_id", "block_key")
-            )
+    inc_keys = _read_increments(spark, workdir, "block_keys")
+    if inc_keys is not None:
+        old_keys = old_keys.select("record_id", "block_key").unionByName(
+            inc_keys.select("record_id", "block_key")
+        )
 
     # With the persisted key artifact, old_offers is not needed at all —
     # pass None so the append plan provably contains no old-corpus scan.
     res = INC.incremental_assign(
-        None if old_keys is not None else resolved_offers,
-        old_attrs, old_clusters, new_offers,
+        None, old_attrs, old_clusters, new_offers,
         idf, matcher, tau, cfg, old_keys=old_keys,
     )
     assignments = res.assignments.localCheckpoint(eager=True)
@@ -301,19 +299,12 @@ def _compact_state_path(workdir: str) -> str:
     return os.path.join(workdir, COMPACT_STATE)
 
 
-def _write_compact_state(workdir: str, state: dict) -> None:
-    tmp = _compact_state_path(workdir) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(state, f, sort_keys=True)
-    os.replace(tmp, _compact_state_path(workdir))
-
-
 def _finish_compaction(workdir: str, state: dict) -> None:
     for stage in INC_STAGES:
         if stage not in state["done"]:
             _swap_stage(workdir, stage)
             state["done"].append(stage)
-            _write_compact_state(workdir, state)
+            MF.write_json(_compact_state_path(workdir), state)
     for stage in INC_STAGES:
         for b in state["batches"]:
             shutil.rmtree(os.path.join(_inc_dir(workdir, stage), b), ignore_errors=True)
@@ -366,42 +357,31 @@ def compact_workdir(
     if not batches:
         return {"compacted_batches": 0}
 
+    # Loaded before anything is written: a workdir without the artifacts
+    # fails here, leaving no scratch dir behind.
+    idf, base_keys = _load_artifacts(spark, workdir)
     n = cfg.n_checkpoint_partitions
     token = f"{len(batches)}:{batches[-1]}"
     base_offers = spark.read.parquet(os.path.join(workdir, "offers"))
     inc_offers = _read_increments(spark, workdir, "offers").select(*OFFER_COLS)
     folded_offers = base_offers.select(*OFFER_COLS, "part_id").unionByName(
-        inc_offers.withColumn(
-            "part_id", F.pmod(F.xxhash64("url"), F.lit(n)).cast("int")
-        )
+        MF.with_part_id(inc_offers, "offers", n)
     )
     folded_offers.write.mode("overwrite").partitionBy("part_id").parquet(
         os.path.join(workdir, "offers.compact")
     )
 
-    idf, base_keys = _load_artifacts(spark, workdir, base_offers)
-    if not os.path.isdir(os.path.join(workdir, "idf")):
-        # Legacy (pre-round-4) workdir: _load_artifacts just refit the IDF
-        # from the PRE-fold base offers. Persist it BEFORE the swap —
-        # otherwise the next append's fallback would refit over the folded
-        # (grown) corpus, drifting the frozen vocabulary/weights away from
-        # those used to build every stored attrs vector (ADVICE r4).
-        # Symmetric with block_keys, which compaction materializes below.
-        _atomic_write(idf, workdir, "idf")
-        idf = spark.read.parquet(os.path.join(workdir, "idf"))
     vec_cols = FE.offers_with_vectors(base_offers.select(*OFFER_COLS), idf).columns
-    folded_attrs = (
+    folded_attrs = MF.with_part_id(
         spark.read.parquet(os.path.join(workdir, "attrs"))
         .select(*vec_cols)
-        .unionByName(_read_increments(spark, workdir, "attrs").select(*vec_cols))
-        .withColumn("part_id", F.pmod(F.xxhash64("record_id"), F.lit(n)).cast("int"))
+        .unionByName(_read_increments(spark, workdir, "attrs").select(*vec_cols)),
+        "attrs", n,
     )
     folded_attrs.write.mode("overwrite").partitionBy("part_id").parquet(
         os.path.join(workdir, "attrs.compact")
     )
 
-    if base_keys is None:  # legacy workdir: derive the artifact now
-        base_keys = B.all_block_keys(base_offers.select(*OFFER_COLS), cfg.blocking)
     folded_keys = base_keys.select("record_id", "block_key").unionByName(
         _read_increments(spark, workdir, "block_keys").select(
             "record_id", "block_key"
@@ -414,53 +394,22 @@ def compact_workdir(
     # Manifest recommit (markers-first: a crash here leaves data unfolded
     # but increments intact — reads stay correct, rerun converges).
     cfg_hash = cfg.config_hash()
-    scratch_offers = spark.read.parquet(os.path.join(workdir, "offers.compact"))
-    _recommit_stage(
-        workdir, "offers", scratch_offers, cfg_hash,
-        f"compact:{token}", n, ts_col="warc_ts",
+    MF.commit_stage_metrics(
+        workdir, "offers",
+        spark.read.parquet(os.path.join(workdir, "offers.compact")),
+        list(range(n)), cfg_hash, f"compact:{token}", ts_col="warc_ts",
+        replace=True,
     )
     offers_fp = MF.stage_fingerprint(workdir, "offers")
-    scratch_attrs = spark.read.parquet(os.path.join(workdir, "attrs.compact"))
-    _recommit_stage(
-        workdir, "attrs", scratch_attrs, cfg_hash, f"offers:{offers_fp}", n
+    MF.commit_stage_metrics(
+        workdir, "attrs",
+        spark.read.parquet(os.path.join(workdir, "attrs.compact")),
+        list(range(n)), cfg_hash, f"offers:{offers_fp}", replace=True,
     )
 
     state = {"phase": "built", "batches": batches, "done": []}
-    _write_compact_state(workdir, state)
+    MF.write_json(_compact_state_path(workdir), state)
     _finish_compaction(workdir, state)
     return {"compacted_batches": len(batches)}
-
-
-def _recommit_stage(
-    workdir: str,
-    stage: str,
-    df: DataFrame,
-    cfg_hash: str,
-    lineage: str,
-    n_parts: int,
-    ts_col: str | None = None,
-) -> None:
-    """Recompute per-partition manifest markers (rows/checksum/ts-range)
-    from folded data — same metric contract as ERPipeline._checkpoint_stage."""
-    first_col = [c for c in df.columns if c != "part_id"][0]
-    aggs = [
-        F.count(F.lit(1)).alias("rows"),
-        F.coalesce(
-            F.sum(F.pmod(F.xxhash64(first_col), F.lit(1_000_000_007))), F.lit(0)
-        ).alias("checksum"),
-    ]
-    if ts_col and ts_col in df.columns:
-        aggs += [
-            F.min(ts_col).cast("string").alias("min_ts"),
-            F.max(ts_col).cast("string").alias("max_ts"),
-        ]
-    stats = {
-        int(r["part_id"]): r.asDict() for r in df.groupBy("part_id").agg(*aggs).collect()
-    }
-    MF.clear_stage(workdir, stage)
-    for p in range(n_parts):
-        m = stats.get(p, {"rows": 0, "checksum": 0})
-        m.pop("part_id", None)
-        MF.commit_partition(workdir, stage, p, cfg_hash, lineage, m)
 
 

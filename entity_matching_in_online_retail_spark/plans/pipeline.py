@@ -8,8 +8,9 @@
     eval               ─▶ metrics in manifests
 
 Every stage writes parquet partitioned by `part_id` (pmod of a stable
-xxhash64 key) plus one JSON commit marker per partition carrying lineage
-(config hash + upstream manifest fingerprint) and per-partition metrics.
+xxhash64 key, `sources/manifest.PART_KEYS`) plus one JSON commit marker per
+partition carrying lineage (config hash + upstream manifest fingerprint) and
+per-partition metrics.
 A killed run resumes idempotently: done partitions are skipped via the
 manifest (left-anti in dataflow terms), pending partitions are recomputed
 and replaced with dynamic partition overwrite. Changing the config or any
@@ -47,6 +48,50 @@ DEFAULT_MATCHER = M.LinearMatcher(
     coefficients=(6.0, 2.0, 3.0, 4.0, 1.0, 1.0),
     intercept=-9.0,
 )
+
+
+def _model_path(workdir: str) -> str:
+    return os.path.join(workdir, "model.json")
+
+
+def save_model(
+    workdir: str, matcher: M.LinearMatcher, threshold: float,
+    lineage: str, config_hash: str,
+) -> None:
+    MF.write_json(
+        _model_path(workdir),
+        {
+            "feature_cols": list(matcher.feature_cols),
+            "coefficients": list(matcher.coefficients),
+            "intercept": matcher.intercept,
+            "threshold": threshold,
+            "lineage": lineage,
+            "config_hash": config_hash,
+        },
+    )
+
+
+def load_model(
+    workdir: str, lineage: str | None = None, config_hash: str | None = None
+) -> tuple[M.LinearMatcher, float] | None:
+    """The workdir's saved (matcher, threshold); None when model.json is
+    absent or, if `lineage`/`config_hash` are given, was trained under
+    another one."""
+    path = _model_path(workdir)
+    if not os.path.exists(path):
+        return None
+    with open(path) as f:
+        saved = json.load(f)
+    if lineage is not None and saved.get("lineage") != lineage:
+        return None
+    if config_hash is not None and saved.get("config_hash") != config_hash:
+        return None
+    matcher = M.LinearMatcher(
+        tuple(saved["feature_cols"]),
+        tuple(saved["coefficients"]),
+        float(saved["intercept"]),
+    )
+    return matcher, float(saved["threshold"])
 
 
 @dataclass
@@ -100,45 +145,16 @@ class ERPipeline:
                     import shutil
 
                     shutil.rmtree(stage_dir)
-            df = build()
-            df_pending = df.where(F.col("part_id").isin([int(p) for p in pending]))
+            is_pending = F.col("part_id").isin([int(p) for p in pending])
             self.catalog.write(
-                df_pending, stage, mode="overwrite",
+                build().where(is_pending), stage, mode="overwrite",
                 partition_by=["part_id"], dynamic=True,
             )
             # Per-partition metrics from the data that actually landed (G2).
-            # Round-6 note: folding these into the write via observe() (one
-            # conditional aggregate per pending part, the CC-fingerprint
-            # pattern) was implemented and measured-REJECTED: CollectMetrics
-            # evaluates its accumulator expressions per row in interpreted
-            # mode, which on the 20M-row pairs / 1.3M-row scores writes cost
-            # ~3s (scores stage A/B: 14.1s vs 11.1s min, OPTIMIZATION_r06.md)
-            # — more than the ~0.4-1.1s columnar re-read job it replaces.
-            # The separate codegen'd metrics pass stays.
-            written = self.catalog.read(stage).where(
-                F.col("part_id").isin([int(p) for p in pending])
+            MF.commit_stage_metrics(
+                self.workdir, stage, self.catalog.read(stage).where(is_pending),
+                pending, self.cfg_hash, lineage, ts_col=ts_col,
             )
-            first_col = [c for c in written.columns if c != "part_id"][0]
-            aggs = [
-                F.count(F.lit(1)).alias("rows"),
-                F.coalesce(
-                    F.sum(F.pmod(F.xxhash64(first_col), F.lit(1_000_000_007))),
-                    F.lit(0),
-                ).alias("checksum"),
-            ]
-            if ts_col and ts_col in written.columns:
-                aggs += [
-                    F.min(ts_col).cast("string").alias("min_ts"),
-                    F.max(ts_col).cast("string").alias("max_ts"),
-                ]
-            stats = {
-                int(r["part_id"]): r.asDict()
-                for r in written.groupBy("part_id").agg(*aggs).collect()
-            }
-            for p in pending:
-                m = stats.get(p, {"rows": 0, "checksum": 0})
-                m.pop("part_id", None)
-                MF.commit_partition(self.workdir, stage, p, self.cfg_hash, lineage, m)
         return self.catalog.read(stage)
 
     def stage_offers(self, pages: DataFrame, use_html: bool = True) -> DataFrame:
@@ -148,7 +164,7 @@ class ERPipeline:
             off = normalize_web_pages(
                 pages, lang=self.cfg.lang_filter, use_html=use_html
             )
-            return off.withColumn("part_id", F.pmod(F.xxhash64("url"), F.lit(n)).cast("int"))
+            return MF.with_part_id(off, "offers", n)
 
         return self._checkpoint_stage("offers", "input", build, ts_col="warc_ts")
 
@@ -166,10 +182,7 @@ class ERPipeline:
             idf = S.fit_idf(offers)
             self.catalog.write(idf, "idf", mode="overwrite")
             idf = self.catalog.read("idf")
-            attrs = FE.offers_with_vectors(offers, idf)
-            return attrs.withColumn(
-                "part_id", F.pmod(F.xxhash64("record_id"), F.lit(n)).cast("int")
-            )
+            return MF.with_part_id(FE.offers_with_vectors(offers, idf), "attrs", n)
 
         return self._checkpoint_stage("attrs", f"offers:{fp}", build)
 
@@ -187,9 +200,8 @@ class ERPipeline:
             # capped blocks feed block_stats AND both (small/hot) join branches
             # — truncate the lineage once instead of recomputing LSH 4x.
             capped = B.cap_blocks(keys, self.cfg.blocking).localCheckpoint(eager=True)
-            pairs = B.candidate_pairs(capped, self.cfg.blocking)
-            return pairs.withColumn(
-                "part_id", F.pmod(F.xxhash64("id_l", "id_r"), F.lit(n)).cast("int")
+            return MF.with_part_id(
+                B.candidate_pairs(capped, self.cfg.blocking), "pairs", n
             )
 
         return self._checkpoint_stage("pairs", f"offers:{fp}", build)
@@ -223,36 +235,20 @@ class ERPipeline:
                 attrs,
                 gate_jaccard=self.cfg.scoring.gate_jaccard,
             )
-            scored = M.score_pairs(feats, matcher)
-            return scored.withColumn(
-                "part_id", F.pmod(F.xxhash64("id_l", "id_r"), F.lit(n)).cast("int")
-            )
+            return MF.with_part_id(M.score_pairs(feats, matcher), "scores", n)
 
         return self._checkpoint_stage("scores", fp, build)
 
     # ----------------------------------------------------------------- model
-
-    def _model_path(self) -> str:
-        return os.path.join(self.workdir, "model.json")
 
     def train_or_load(
         self, labeled_ids: DataFrame, attrs: DataFrame, lineage: str
     ) -> tuple[M.LinearMatcher, float]:
         """Train the classifier on labeled pair features (M1) and tune the
         threshold on the validation split; persist + reuse across resumes."""
-        path = self._model_path()
-        if os.path.exists(path):
-            with open(path) as f:
-                saved = json.load(f)
-            if saved.get("lineage") == lineage and saved.get("config_hash") == self.cfg_hash:
-                return (
-                    M.LinearMatcher(
-                        tuple(saved["feature_cols"]),
-                        tuple(saved["coefficients"]),
-                        float(saved["intercept"]),
-                    ),
-                    float(saved["threshold"]),
-                )
+        saved = load_model(self.workdir, lineage, self.cfg_hash)
+        if saved is not None:
+            return saved
         feats = FE.pair_features(labeled_ids.select("id_l", "id_r"), attrs).join(
             labeled_ids, ["id_l", "id_r"]
         )
@@ -272,18 +268,7 @@ class ERPipeline:
             tau = self.cfg.scoring.threshold
         else:
             tau, _ = M.best_threshold(val_scored)
-        with open(path, "w") as f:
-            json.dump(
-                {
-                    "feature_cols": list(matcher.feature_cols),
-                    "coefficients": list(matcher.coefficients),
-                    "intercept": matcher.intercept,
-                    "threshold": tau,
-                    "lineage": lineage,
-                    "config_hash": self.cfg_hash,
-                },
-                f,
-            )
+        save_model(self.workdir, matcher, tau, lineage, self.cfg_hash)
         return matcher, tau
 
     # ------------------------------------------------------------------- run
@@ -318,16 +303,15 @@ class ERPipeline:
         if labeled_ids is not None:
             preds = EV.cluster_predictions(labeled_ids, clusters)
             metrics = EV.confusion(preds)
-            with open(os.path.join(self.workdir, "eval.json"), "w") as f:
-                json.dump(
-                    {
-                        "tp": metrics.tp, "fp": metrics.fp,
-                        "fn": metrics.fn, "tn": metrics.tn,
-                        "precision": metrics.precision,
-                        "recall": metrics.recall,
-                        "f1": metrics.f1,
-                        "threshold": tau,
-                    },
-                    f,
-                )
+            MF.write_json(
+                os.path.join(self.workdir, "eval.json"),
+                {
+                    "tp": metrics.tp, "fp": metrics.fp,
+                    "fn": metrics.fn, "tn": metrics.tn,
+                    "precision": metrics.precision,
+                    "recall": metrics.recall,
+                    "f1": metrics.f1,
+                    "threshold": tau,
+                },
+            )
         return RunResult(clusters=clusters, metrics=metrics, model=matcher, threshold=tau)

@@ -42,13 +42,13 @@ plans/append.py compacts increments if batch counts grow unbounded.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans import curate as CUR
+from ..sources.manifest import write_json
 
 
 def _batch_dir(workdir: str, store: str, batch_id: int) -> str:
@@ -161,10 +161,10 @@ def apply_curate_batch(
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()
     }
-    with open(
-        os.path.join(_batch_dir(workdir, "kept", batch_id), "_report.json"), "w"
-    ) as f:
-        json.dump({"batch_id": batch_id, "stages": report}, f)
+    write_json(
+        os.path.join(_batch_dir(workdir, "kept", batch_id), "_report.json"),
+        {"batch_id": batch_id, "stages": report},
+    )
     with open(_marker(workdir, batch_id), "w") as f:
         f.write("ok")
 

@@ -12,10 +12,11 @@ touching only work proportional to the increment (operators/incremental.py).
 
 O(increment) contract (round 4): the base run persists its fitted IDF and
 per-record block keys; appends LOAD both instead of refitting/recomputing
-over the corpus. The only corpus-wide touches left in an append are
-column-pruned id scans (dedupe of incoming ids, attrs/keys store loads whose
-per-batch exclusions are broadcast anti-joins on the increment's ids) and
-the clusters overwrite — at 100 TB the latter becomes an Iceberg MERGE of
+over the corpus; a workdir without either artifact (or without model.json)
+is rejected with a ValueError naming it. The only corpus-wide touches left
+in an append are column-pruned id scans (dedupe of incoming ids, attrs/keys
+store loads whose per-batch exclusions are broadcast anti-joins on the
+increment's ids) and the clusters overwrite — at 100 TB the latter becomes an Iceberg MERGE of
 changed rows only; the dataflow that PRODUCES assignments is already
 increment-bounded.
 
@@ -82,35 +83,15 @@ from pyspark.sql import functions as F
 from entity_matching_in_online_retail_spark import fixtures as fx
 from entity_matching_in_online_retail_spark.config import DEFAULT_CONFIG
 from entity_matching_in_online_retail_spark.plans import evaluate as EV
-from entity_matching_in_online_retail_spark.plans.pipeline import ERPipeline
-from entity_matching_in_online_retail_spark.session import get_spark
-
-# The append engine itself lives in the package (usable from the batch CLI
-# here AND from streaming/append_stream.py foreachBatch); re-export the full
-# surface so existing imports of this module keep working.
-from entity_matching_in_online_retail_spark.plans.append import (  # noqa: F401
-    COMPACT_STATE,
-    INC_STAGES,
-    OFFER_COLS,
-    _atomic_write,
-    _committed_marker,
-    _compact_state_path,
-    _finish_compaction,
-    _heal_batch_artifacts,
+from entity_matching_in_online_retail_spark.plans.append import (
     _inc_dir,
     _list_batches,
-    _load_artifacts,
     _load_known_offers,
-    _next_batch_name,
-    _read_increments,
-    _recommit_stage,
-    _recover_compaction,
-    _swap_stage,
-    _uncommitted_batches,
-    _write_compact_state,
     append_batch,
     compact_workdir,
 )
+from entity_matching_in_online_retail_spark.plans.pipeline import ERPipeline
+from entity_matching_in_online_retail_spark.session import get_spark
 
 DEMO_SIZES = {"tiny": 50, "small": 2000}
 

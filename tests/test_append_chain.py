@@ -1,25 +1,17 @@
-"""Chained appends (jobs/run_append.py::append_batch): successive batches
+"""Chained appends (plans/append.py::append_batch): successive batches
 must land on exactly the labels a single batch run over everything produces
 (frozen base IDF), later batches must match against earlier increments, a
 crash between the increment write and the clusters write must self-heal on
 the next append, appends must be O(increment) (no IDF refit, no corpus-wide
 block-key recompute), and compaction must fold increments into the base
-stores without changing any label."""
+stores without changing any label. A workdir missing the persisted
+artifacts is rejected, not silently refit."""
 
 import os
 import shutil
-import sys
 
 import pytest
 from pyspark.sql import functions as F
-
-sys.path.insert(
-    0,
-    os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "jobs"),
-)
-
-import run_append as RA  # noqa: E402
-from run_append import append_batch, compact_workdir  # noqa: E402
 
 from entity_matching_in_online_retail_spark import fixtures as fx
 from entity_matching_in_online_retail_spark.config import DEFAULT_CONFIG
@@ -30,6 +22,11 @@ from entity_matching_in_online_retail_spark.operators import features as FE
 from entity_matching_in_online_retail_spark.operators import model as M
 from entity_matching_in_online_retail_spark.operators.normalize import (
     normalize_web_pages,
+)
+from entity_matching_in_online_retail_spark.plans import append as AP
+from entity_matching_in_online_retail_spark.plans.append import (
+    append_batch,
+    compact_workdir,
 )
 from entity_matching_in_online_retail_spark.plans.pipeline import ERPipeline
 
@@ -90,9 +87,9 @@ def test_chained_appends_equal_batch_run(spark, chain_env):
 
     # every applied batch left a committed artifact triple + merges audit
     for stage in ("offers", "attrs", "block_keys"):
-        assert len(RA._list_batches(RA._inc_dir(wd, stage))) == 2
-    assert RA._uncommitted_batches(wd) == []
-    assert len(RA._list_batches(os.path.join(wd, "merges"))) == 2
+        assert len(AP._list_batches(AP._inc_dir(wd, stage))) == 2
+    assert AP._uncommitted_batches(wd) == []
+    assert len(AP._list_batches(os.path.join(wd, "merges"))) == 2
 
     # applying an already-applied batch is a no-op
     out_again = append_batch(spark, wd, batch_b, cfg)
@@ -146,10 +143,10 @@ def test_crash_between_increment_and_clusters_self_heals(
     # Simulate the earliest crash window: batch offers written, but attrs/
     # keys/clusters/marker all lost (the real crash state — the _COMMITTED
     # marker is written strictly after the clusters write).
-    [batch] = RA._list_batches(RA._inc_dir(wd, "offers"))
-    os.remove(RA._committed_marker(wd, batch))
-    shutil.rmtree(os.path.join(RA._inc_dir(wd, "attrs"), batch))
-    shutil.rmtree(os.path.join(RA._inc_dir(wd, "block_keys"), batch))
+    [batch] = AP._list_batches(AP._inc_dir(wd, "offers"))
+    os.remove(AP._committed_marker(wd, batch))
+    shutil.rmtree(os.path.join(AP._inc_dir(wd, "attrs"), batch))
+    shutil.rmtree(os.path.join(AP._inc_dir(wd, "block_keys"), batch))
     shutil.rmtree(os.path.join(wd, "clusters"))
     spark.createDataFrame(
         base_clusters, "record_id bigint, cluster_id bigint"
@@ -158,9 +155,9 @@ def test_crash_between_increment_and_clusters_self_heals(
     out = append_batch(spark, wd, batch_b, cfg)
     assert out["recovered_records"] > 0  # batch A re-entered and re-resolved
     # recovery healed the crashed batch's artifact dirs + marker
-    assert os.path.isdir(os.path.join(RA._inc_dir(wd, "attrs"), batch))
-    assert os.path.isdir(os.path.join(RA._inc_dir(wd, "block_keys"), batch))
-    assert RA._uncommitted_batches(wd) == []
+    assert os.path.isdir(os.path.join(AP._inc_dir(wd, "attrs"), batch))
+    assert os.path.isdir(os.path.join(AP._inc_dir(wd, "block_keys"), batch))
+    assert AP._uncommitted_batches(wd) == []
 
     healed = _labels(spark.read.parquet(os.path.join(wd, "clusters")))
     # reference: the same two appends without a crash
@@ -192,7 +189,7 @@ def test_five_batch_chain_with_compaction(spark, tmp_path_factory):
             cres = compact_workdir(spark, wd, cfg)
             assert cres["compacted_batches"] == 2
             for stage in ("offers", "attrs", "block_keys"):
-                assert RA._list_batches(RA._inc_dir(wd, stage)) == []
+                assert AP._list_batches(AP._inc_dir(wd, stage)) == []
             after = _labels(spark.read.parquet(os.path.join(wd, "clusters")))
             assert after == before  # compaction never changes labels
 
@@ -204,7 +201,7 @@ def test_five_batch_chain_with_compaction(spark, tmp_path_factory):
     assert got == want
 
     # merges audit covers every append (per-batch dirs, never overwritten)
-    assert len(RA._list_batches(os.path.join(wd, "merges"))) == 5
+    assert len(AP._list_batches(os.path.join(wd, "merges"))) == 5
 
     # final compaction folds the remaining three batches
     cres = compact_workdir(spark, wd, cfg)
@@ -231,11 +228,7 @@ def test_compaction_crash_rolls_forward(spark, tmp_path_factory):
     append_batch(spark, wd, pages.where(part == 4), cfg)
     want = _labels(spark.read.parquet(os.path.join(wd, "clusters")))
 
-    # run compaction but crash right after the journal is written —
-    # patch the plans.append module, where compact_workdir resolves its
-    # globals (run_append only re-exports the names)
-    from entity_matching_in_online_retail_spark.plans import append as AP
-
+    # run compaction but crash right after the journal is written
     real_finish = AP._finish_compaction
 
     def _crash(workdir, state):
@@ -248,50 +241,38 @@ def test_compaction_crash_rolls_forward(spark, tmp_path_factory):
     finally:
         AP._finish_compaction = real_finish
 
-    assert os.path.exists(RA._compact_state_path(wd))
+    assert os.path.exists(AP._compact_state_path(wd))
     # next entry (an empty append) recovers: journal drained, stores folded
     out = append_batch(spark, wd, pages.where(part == 4).limit(0), cfg)
     assert out["new_records"] == 0
-    assert not os.path.exists(RA._compact_state_path(wd))
-    assert RA._list_batches(RA._inc_dir(wd, "offers")) == []
+    assert not os.path.exists(AP._compact_state_path(wd))
+    assert AP._list_batches(AP._inc_dir(wd, "offers")) == []
     assert _labels(spark.read.parquet(os.path.join(wd, "clusters"))) == want
     assert spark.read.parquet(os.path.join(wd, "offers")).count() == out[
         "base_records"
     ]
 
 
-def test_legacy_compaction_persists_prefold_idf(spark, tmp_path_factory):
-    """ADVICE r4 (medium): compacting a pre-round-4 workdir (no idf/
-    artifact) must write the refit IDF — fit over the PRE-fold base offers
-    — to <wd>/idf BEFORE the swap. Otherwise the next append's fallback
-    would refit over the folded (grown) corpus, silently drifting the
-    frozen vocabulary away from the weights baked into every stored attrs
-    vector."""
-    import run_append as RA
-
+def test_missing_artifact_is_rejected(spark, tmp_path_factory):
+    """A workdir without the persisted idf/ or block_keys/ artifact makes
+    append and compaction raise ValueError naming it, before either writes
+    anything: no refit over the corpus, no scratch dirs, no new batch."""
     cfg = DEFAULT_CONFIG
-    wd = str(tmp_path_factory.mktemp("legacy_compact"))
-    corpus = fx.generate_corpus(n_entities=30, seed=29)
+    wd = str(tmp_path_factory.mktemp("missing_artifact"))
+    parked = str(tmp_path_factory.mktemp("parked_artifact"))
+    corpus = fx.generate_corpus(n_entities=20, seed=37)
     pages, labeled, _ = fx.corpus_to_spark(spark, corpus)
     part = F.pmod(F.xxhash64("url"), F.lit(4))
-    base_pages = pages.where(part <= 2)
-    ERPipeline(spark, wd, cfg).run(base_pages, labeled_urls=labeled)
+    ERPipeline(spark, wd, cfg).run(pages.where(part <= 2), labeled_urls=labeled)
     append_batch(spark, wd, pages.where(part == 3), cfg)
 
-    # what the frozen vocabulary must remain: idf fit on PRE-fold offers
-    want = {
-        r["token"]: round(r["idf"], 9)
-        for r in S.fit_idf(
-            normalize_web_pages(base_pages, lang=cfg.lang_filter)
-        ).collect()
-    }
-
-    shutil.rmtree(os.path.join(wd, "idf"))  # simulate a pre-round-4 workdir
-    out = compact_workdir(spark, wd, cfg)
-    assert out["compacted_batches"] == 1
-    assert os.path.isdir(os.path.join(wd, "idf"))  # persisted by the fix
-    got = {
-        r["token"]: round(r["idf"], 9)
-        for r in spark.read.parquet(os.path.join(wd, "idf")).collect()
-    }
-    assert got == want  # pre-fold vocabulary, NOT a refit over folded corpus
+    for artifact in ("idf", "block_keys"):
+        shutil.move(os.path.join(wd, artifact), os.path.join(parked, artifact))
+        before = sorted(os.listdir(wd))
+        with pytest.raises(ValueError, match=f"{artifact}/"):
+            append_batch(spark, wd, pages.where(part == 3), cfg)
+        with pytest.raises(ValueError, match=f"{artifact}/"):
+            compact_workdir(spark, wd, cfg)
+        assert sorted(os.listdir(wd)) == before
+        assert len(AP._list_batches(AP._inc_dir(wd))) == 1
+        shutil.move(os.path.join(parked, artifact), os.path.join(wd, artifact))

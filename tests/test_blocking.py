@@ -5,7 +5,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from entity_matching_in_online_retail_spark.config import BlockingConfig
+from entity_matching_in_online_retail_spark.config import BlockingConfig, ScoringConfig
 from entity_matching_in_online_retail_spark.functions import hashing as H
 from entity_matching_in_online_retail_spark.operators import blocking as B
 
@@ -137,3 +137,14 @@ def test_blocking_config_rejects_inconsistent_values():
         BlockingConfig(minhash_k=64, lsh_bands=16, lsh_rows=2)
     BlockingConfig(block_cap=51, salt_threshold=50)  # boundary: valid
     BlockingConfig(minhash_k=32, lsh_bands=16, lsh_rows=2)
+
+
+def test_scoring_config_rejects_out_of_range_values():
+    """The Jaccard gate and the match threshold are compared against values
+    in [0, 1]; outside that range they would drop every pair or none."""
+    for kw in ({"gate_jaccard": -0.1}, {"gate_jaccard": 1.5},
+               {"threshold": -0.01}, {"threshold": 2.0}):
+        with pytest.raises(ValueError, match=next(iter(kw))):
+            ScoringConfig(**kw)
+    ScoringConfig(gate_jaccard=0.0, threshold=1.0)  # boundaries: valid
+    ScoringConfig(gate_jaccard=1.0, threshold=0.0)

@@ -126,3 +126,48 @@ def test_manifests_carry_lineage_and_metrics(run):
         assert "rows" in m["metrics"] and "checksum" in m["metrics"]
     total_offers = sum(m["metrics"]["rows"] for m in all_m if m["stage"] == "offers")
     assert total_offers > 0
+
+
+def test_torn_model_save_retrains(run, spark, tiny_spark, tmp_path, monkeypatch):
+    """A crash half-way through saving model.json must not break the resume:
+    the next train_or_load retrains (model.json is committed atomically) and
+    returns the matcher an uninterrupted run trained, and the call after
+    that loads it instead of training again."""
+    from entity_matching_in_online_retail_spark.operators import model as M
+    from entity_matching_in_online_retail_spark.plans import evaluate as EV
+
+    base, res, run_wd = run
+    pages, labeled, _ = tiny_spark
+    attrs = base.catalog.read("attrs")
+    labeled_ids = EV.labeled_pairs_to_ids(labeled, base.catalog.read("offers"))
+    lineage = MF.stage_fingerprint(run_wd, "attrs")
+    pipe = ERPipeline(spark, str(tmp_path))
+
+    real_dump = json.dump
+
+    def torn_dump(obj, f, *args, **kwargs):
+        if os.path.basename(getattr(f, "name", "")).startswith("model.json"):
+            text = json.dumps(obj)
+            f.write(text[: len(text) // 2])
+            raise OSError("simulated crash mid-write")
+        return real_dump(obj, f, *args, **kwargs)
+
+    monkeypatch.setattr(json, "dump", torn_dump)
+    with pytest.raises(OSError, match="simulated crash"):
+        pipe.train_or_load(labeled_ids, attrs, lineage)
+    monkeypatch.setattr(json, "dump", real_dump)
+
+    def check(got):
+        matcher, tau = got
+        assert matcher.feature_cols == res.model.feature_cols
+        assert matcher.coefficients == pytest.approx(res.model.coefficients, rel=1e-6)
+        assert matcher.intercept == pytest.approx(res.model.intercept, rel=1e-6)
+        assert tau == pytest.approx(res.threshold)
+
+    check(pipe.train_or_load(labeled_ids, attrs, lineage))
+
+    def no_training(*a, **k):
+        raise AssertionError("retrained although model.json was committed")
+
+    monkeypatch.setattr(M, "train_matcher", no_training)
+    check(pipe.train_or_load(labeled_ids, attrs, lineage))
