@@ -63,8 +63,6 @@ class ScoringConfig:
     # Cheap-feature cascade gate: candidate pairs with token Jaccard below
     # this are dropped before the Python-side features (certain non-matches).
     gate_jaccard: float = 0.15
-    # TF-IDF hashing dimensionality for the cosine feature.
-    tfidf_min_df: int = 1
 
     def __post_init__(self) -> None:
         # Both are compared against probabilities / Jaccard values in [0, 1];
@@ -85,6 +83,16 @@ class PipelineConfig:
     lang_filter: str = "en"
     # Number of url-hash partitions for per-partition checkpoint/lineage.
     n_checkpoint_partitions: int = 8
+
+    def __post_init__(self) -> None:
+        # _checkpoint_stage treats range(n) as the stage's partitions; with
+        # none, nothing is ever pending and a filled workdir's old stage data
+        # would be returned under the new config.
+        if self.n_checkpoint_partitions < 1:
+            raise ValueError(
+                f"n_checkpoint_partitions ({self.n_checkpoint_partitions}) "
+                "must be >= 1"
+            )
 
     def config_hash(self) -> str:
         payload = json.dumps(asdict(self), sort_keys=True, default=list)

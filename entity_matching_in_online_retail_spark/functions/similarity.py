@@ -3,9 +3,9 @@
 The reference computes token-set Jaccard, Levenshtein, Jaro-Winkler and
 TF-IDF cosine per labeled/candidate pair with pandas/sklearn on one node.
 Here: Jaccard and Levenshtein are Catalyst built-ins (JVM, whole-stage
-codegen); Jaro-Winkler and sparse-cosine have no Spark built-in, so they run
-in Arrow-batched scalar pandas UDFs (the only Python on the hot path — no
-per-row Python UDFs, per the north rule).
+codegen); Jaro-Winkler has no Spark built-in, so it runs in an Arrow-batched
+scalar pandas UDF (the only Python on the hot path — no per-row Python UDFs,
+per the north rule), fused with the sparse cosine in the broadcast regime.
 """
 
 from __future__ import annotations
@@ -203,23 +203,14 @@ def jaro_winkler_batch(
     return np.where(j > boost_threshold, j + prefix * p * (1.0 - j), j)
 
 
-@F.pandas_udf(T.DoubleType())
-def jaro_winkler_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    av, bv = a.to_numpy(dtype=object), b.to_numpy(dtype=object)
-    ok = np.array([x is not None and y is not None for x, y in zip(av, bv)])
-    out = np.zeros(len(a))
-    if ok.any():
-        out[ok] = jaro_winkler_batch(list(av[ok]), list(bv[ok]))
-    return pd.Series(out)
-
-
 # --------------------------------------------------------------------------
 # F4: TF-IDF cosine.
 # Fit: document frequency by DataFrame aggregation (distributed, one shuffle)
 #   -> idf(token) = ln((N+1)/(df+1)) + 1  (smoothed, sklearn-style).
 # Vectors: per record, sorted (token-hash int64, l2-normalized weight) arrays
 #   built with built-ins only.
-# Score: sparse dot product per pair in an Arrow-batched pandas UDF.
+# Score: sparse dot product per pair — inside pair_scores_udf in the
+#   broadcast regime, as the JVM expression sparse_cosine_expr without it.
 # --------------------------------------------------------------------------
 
 
@@ -273,28 +264,6 @@ def with_tfidf_vector(
         "tfidf_idx",
         F.transform("_raw_val", lambda x: x / norm).alias("tfidf_val"),
     )
-
-
-@F.pandas_udf(T.DoubleType())
-def sparse_cosine_udf(
-    idx_l: pd.Series, val_l: pd.Series, idx_r: pd.Series, val_r: pd.Series
-) -> pd.Series:
-    """Dot product of two sorted sparse L2-normalized vectors per row."""
-    out = np.zeros(len(idx_l))
-    il, vl = idx_l.to_numpy(dtype=object), val_l.to_numpy(dtype=object)
-    ir, vr = idx_r.to_numpy(dtype=object), val_r.to_numpy(dtype=object)
-    for i in range(len(out)):
-        a, b = il[i], ir[i]
-        if a is None or b is None or len(a) == 0 or len(b) == 0:
-            continue
-        a = np.asarray(a, dtype=np.int64)
-        b = np.asarray(b, dtype=np.int64)
-        _, ia, ib = np.intersect1d(a, b, assume_unique=True, return_indices=True)
-        if len(ia):
-            wa = np.asarray(vl[i], dtype=np.float64)[ia]
-            wb = np.asarray(vr[i], dtype=np.float64)[ib]
-            out[i] = float(np.dot(wa, wb))
-    return pd.Series(out)
 
 
 # --------------------------------------------------------------------------
@@ -388,9 +357,10 @@ def pair_scores_udf(
 
 
 @F.pandas_udf(T.DoubleType())
-def jw_pairs_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Factorized batch Jaro-Winkler (same kernel as pair_scores_udf) for
-    plans that compute the cosine JVM-side and only need JW from Python."""
+def jaro_winkler_udf(a: pd.Series, b: pd.Series) -> pd.Series:
+    """Jaro-Winkler per row, 0.0 where either side is null: the factorized
+    kernel of pair_scores_udf, for plans that need only JW from Python (the
+    no-broadcast scoring regime computes the cosine JVM-side)."""
     return pd.Series(_factorized_jw(a, b))
 
 

@@ -70,14 +70,6 @@ def alpha_ratio(text_col: Column) -> Column:
     ).otherwise(F.lit(0.0))
 
 
-def stopword_ratio(tokens_col: Column, lang: str = "en") -> Column:
-    words = LANG_STOPWORDS[lang]
-    hits = F.size(F.array_intersect(tokens_col, F.array(*[F.lit(w) for w in words])))
-    return F.when(
-        F.size(tokens_col) > 0, hits.cast("double") / F.size(tokens_col)
-    ).otherwise(F.lit(0.0))
-
-
 def mean_word_len(tokens_col: Column) -> Column:
     # bigint zero (ADVICE r5): an int accumulator would raise an ANSI
     # overflow on a document whose total token chars exceed 2^31; the

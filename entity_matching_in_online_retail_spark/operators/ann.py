@@ -43,25 +43,6 @@ def _hyperplanes(n_planes: int, dims: int, seed: int = ANN_SEED) -> np.ndarray:
     return rng.standard_normal((n_planes, dims))
 
 
-def with_hyperplane_bucket(
-    df: DataFrame,
-    vec_col: str,
-    n_planes: int = 12,
-    dims: int = 64,
-    seed: int = ANN_SEED,
-    bucket_col: str = "bucket",
-) -> DataFrame:
-    """Attach a sign-bit LSH bucket id. Hyperplane coefficients are plan
-    literals (constant-folded; nothing broadcast at runtime)."""
-    planes = _hyperplanes(n_planes, dims, seed)
-    bucket = F.lit(0).cast("long")
-    for i, p in enumerate(planes):
-        plane = F.array(*[F.lit(float(x)) for x in p])
-        bit = F.when(dot(F.col(vec_col), plane) > 0, F.lit(1)).otherwise(F.lit(0))
-        bucket = bucket + F.shiftleft(bit.cast("long"), i)
-    return df.withColumn(bucket_col, bucket)
-
-
 def with_table_buckets(
     df: DataFrame,
     vec_col: str,

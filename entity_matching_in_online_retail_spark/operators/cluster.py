@@ -87,14 +87,6 @@ def _fingerprint_aggs() -> list:
     ]
 
 
-def _fingerprint(edges: DataFrame) -> tuple[int, int, int, int, int]:
-    """Standalone one-aggregate-pass fingerprint (kept for tests/tools; the
-    CC loop folds the same aggregates into the checkpoint via observe)."""
-    row = edges.agg(*_fingerprint_aggs()).first()
-    return (int(row["n"]), int(row["h1"]), int(row["h2"]),
-            int(row["lo"]), int(row["hi"]))
-
-
 def _local_finish(edges: DataFrame) -> DataFrame:
     """Single-task finisher for a sub-task-sized edge frontier.
 

@@ -20,19 +20,6 @@ from pyspark.sql import functions as F
 
 from ..functions import similarity as S
 
-# Full column set of the checkpointed attrs table (offers_with_vectors output).
-ATTR_COLS = [
-    "record_id",
-    "tokens",
-    "token_hashes",
-    "title_norm",
-    "brand",
-    "price",
-    "tfidf_idx",
-    "tfidf_val",
-]
-
-
 def _broadcasts_disabled(df: DataFrame) -> bool:
     """True in the no-broadcast regime (autoBroadcastJoinThreshold = -1)."""
     thr = str(df.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold", "10m"))
@@ -191,7 +178,7 @@ def pair_features(
             "id_r",
             "jaccard",
             "lev_sim",
-            S.jw_pairs_udf(F.col("l_title_norm"), F.col("r_title_norm")).alias(
+            S.jaro_winkler_udf(F.col("l_title_norm"), F.col("r_title_norm")).alias(
                 "jw_sim"
             ),
             S.sparse_cosine_expr(

@@ -140,7 +140,6 @@ def append_batch(
     workdir: str,
     new_pages: DataFrame,
     cfg: PipelineConfig = DEFAULT_CONFIG,
-    use_html: bool = True,
 ) -> dict:
     """Resolve one batch against the workdir's clustering; persist the
     increment artifacts + updated clusters + per-batch merges; return
@@ -155,7 +154,7 @@ def append_batch(
     idf, base_keys = _load_artifacts(spark, workdir)
 
     incoming = (
-        normalize_web_pages(new_pages, lang=cfg.lang_filter, use_html=use_html)
+        normalize_web_pages(new_pages, lang=cfg.lang_filter)
         .select(*OFFER_COLS)
         .join(known_offers.select("record_id"), "record_id", "left_anti")
     )

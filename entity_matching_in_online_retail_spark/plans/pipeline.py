@@ -108,12 +108,11 @@ class ERPipeline:
         spark: SparkSession,
         workdir: str,
         cfg: PipelineConfig = DEFAULT_CONFIG,
-        fmt: str = "parquet",
     ):
         self.spark = spark
         self.workdir = workdir
         self.cfg = cfg
-        self.catalog = Catalog(spark, workdir, fmt)
+        self.catalog = Catalog(spark, workdir)
         self.cfg_hash = cfg.config_hash()
 
     # ---------------------------------------------------------------- stages
@@ -141,7 +140,7 @@ class ERPipeline:
                 # lineage on read.
                 MF.clear_stage(self.workdir, stage)
                 stage_dir = self.catalog.path(stage)
-                if self.catalog.fmt == "parquet" and os.path.isdir(stage_dir):
+                if os.path.isdir(stage_dir):
                     import shutil
 
                     shutil.rmtree(stage_dir)
@@ -277,9 +276,8 @@ class ERPipeline:
         self,
         pages: DataFrame,
         labeled_urls: DataFrame | None = None,
-        use_html: bool = True,
     ) -> RunResult:
-        offers = self.stage_offers(pages, use_html=use_html)
+        offers = self.stage_offers(pages)
         attrs = self.stage_attrs(offers)
         pairs = self.stage_pairs(offers)
 

@@ -1,12 +1,8 @@
-"""Table catalog: Iceberg in prod, partitioned parquet stand-in in-sandbox.
+"""Table catalog: every workdir table is a parquet directory under `root`.
 
-No Iceberg runtime jar exists in this sandbox (verified in SURVEY.md §0), so
-`fmt="parquet"` is the default and `fmt="iceberg"` is a config switch that
-issues `spark.read.format("iceberg")` / `writeTo(...)` on a real cluster.
-All readers go through here so the swap is one constructor argument.
-
-Writes use dynamic partition overwrite so a resumed run replaces only the
-partitions it recomputes (idempotent resume, north rule).
+Stage writers partition by `part_id` with dynamic partition overwrite, so a
+resumed run replaces only the partitions it recomputes (idempotent resume,
+north rule).
 """
 
 from __future__ import annotations
@@ -17,30 +13,15 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 class Catalog:
-    def __init__(self, spark: SparkSession, root: str, fmt: str = "parquet"):
-        if fmt not in ("parquet", "iceberg"):
-            raise ValueError(f"unsupported format: {fmt}")
+    def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        self.fmt = fmt
 
     def path(self, name: str) -> str:
         return os.path.join(self.root, name)
 
-    def read(self, name: str, schema: str | None = None) -> DataFrame:
-        if self.fmt == "iceberg":
-            return self.spark.read.format("iceberg").load(name)
-        reader = self.spark.read
-        if schema is not None:
-            reader = reader.schema(schema)
-        return reader.parquet(self.path(name))
-
-    def exists(self, name: str) -> bool:
-        p = self.path(name)
-        return os.path.isdir(p) and any(
-            f.endswith(".parquet") or f == "_SUCCESS" or f.startswith("part_id=")
-            for f in os.listdir(p)
-        )
+    def read(self, name: str) -> DataFrame:
+        return self.spark.read.parquet(self.path(name))
 
     def write(
         self,
@@ -50,13 +31,6 @@ class Catalog:
         partition_by: list[str] | None = None,
         dynamic: bool = False,
     ) -> str:
-        if self.fmt == "iceberg":
-            writer = df.writeTo(name)
-            if mode == "overwrite":
-                writer.createOrReplace()
-            else:
-                writer.append()
-            return name
         w = df.write.mode(mode)
         if dynamic:
             w = w.option("partitionOverwriteMode", "dynamic")

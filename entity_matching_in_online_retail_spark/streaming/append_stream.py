@@ -37,7 +37,6 @@ def stream_append(
     input_dir: str,
     checkpoint_dir: str,
     cfg: PipelineConfig = DEFAULT_CONFIG,
-    use_html: bool = True,
     available_now: bool = True,
 ):
     """Stream web-page files from `input_dir`, resolving each micro-batch
@@ -48,7 +47,7 @@ def stream_append(
     def _apply(batch_df, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        append_batch(spark, workdir, batch_df, cfg, use_html=use_html)
+        append_batch(spark, workdir, batch_df, cfg)
 
     writer = (
         pages.writeStream.foreachBatch(_apply)

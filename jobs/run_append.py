@@ -2,7 +2,7 @@
 
     spark-submit --py-files em.zip jobs/run_append.py \
         --workdir <existing run's stage dir> --new <web_pages parquet> \
-        [--labeled <labeled_pairs parquet>] [--cores N] [--no-html] \
+        [--labeled <labeled_pairs parquet>] [--cores N] \
         [--compact-every K] [--compact]
 
 Resolves a new batch of web pages against the clustering an earlier
@@ -106,7 +106,6 @@ def main() -> int:
     ap.add_argument("--labeled", help="labeled_pairs parquet for evaluation")
     ap.add_argument("--demo", choices=sorted(DEMO_SIZES), help="self-contained demo")
     ap.add_argument("--cores", type=int, default=None)
-    ap.add_argument("--no-html", action="store_true", help="trust the text column")
     ap.add_argument(
         "--compact-every", type=int, default=16, metavar="K",
         help="fold increments into the base stores once K committed batches "
@@ -152,9 +151,7 @@ def main() -> int:
             ap.error("--new or --demo required")
         new_pages = spark.read.parquet(args.new)
 
-    out = append_batch(
-        spark, args.workdir, new_pages, cfg, use_html=not args.no_html
-    )
+    out = append_batch(spark, args.workdir, new_pages, cfg)
     if args.compact_every and len(
         [b for b in _list_batches(_inc_dir(args.workdir, "offers"))]
     ) >= args.compact_every:

@@ -1,7 +1,7 @@
 """Pipeline CLI — the spark-submit entry point.
 
     spark-submit --py-files em.zip jobs/run_pipeline.py \
-        --input <web_pages parquet/iceberg> --workdir <stage dir> \
+        --input <web_pages parquet> --workdir <stage dir> \
         [--labeled <labeled_pairs parquet>] [--cores N]
 
 Sandbox equivalent (same code path, local master):
@@ -37,7 +37,6 @@ def main() -> int:
     ap.add_argument("--workdir", required=True, help="stage/checkpoint dir")
     ap.add_argument("--demo", choices=sorted(DEMO_SIZES), help="generate demo corpus")
     ap.add_argument("--cores", type=int, default=None)
-    ap.add_argument("--no-html", action="store_true", help="trust the text column")
     args = ap.parse_args()
 
     spark = get_spark("er_pipeline", cores=args.cores)

@@ -5,7 +5,11 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from entity_matching_in_online_retail_spark.config import BlockingConfig, ScoringConfig
+from entity_matching_in_online_retail_spark.config import (
+    BlockingConfig,
+    PipelineConfig,
+    ScoringConfig,
+)
 from entity_matching_in_online_retail_spark.functions import hashing as H
 from entity_matching_in_online_retail_spark.operators import blocking as B
 
@@ -137,6 +141,15 @@ def test_blocking_config_rejects_inconsistent_values():
         BlockingConfig(minhash_k=64, lsh_bands=16, lsh_rows=2)
     BlockingConfig(block_cap=51, salt_threshold=50)  # boundary: valid
     BlockingConfig(minhash_k=32, lsh_bands=16, lsh_rows=2)
+
+
+def test_pipeline_config_rejects_no_checkpoint_partitions():
+    """With no checkpoint partitions nothing is ever pending, so a filled
+    workdir's old stage data would be returned under the new config."""
+    for n in (0, -1):
+        with pytest.raises(ValueError, match="n_checkpoint_partitions"):
+            PipelineConfig(n_checkpoint_partitions=n)
+    PipelineConfig(n_checkpoint_partitions=1)  # boundary: valid
 
 
 def test_scoring_config_rejects_out_of_range_values():

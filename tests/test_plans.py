@@ -45,24 +45,30 @@ def test_lang_filter_pushed_to_scan(spark, pages_parquet):
 def test_scoring_plan_shape(spark, tiny_spark, tmp_path_factory):
     """The scoring dataflow must be: broadcast attribute fetches (no shuffle
     of the pair table beyond the explicit repartition), gate before the
-    Arrow UDF, classifier folded as literals (no Python in the score)."""
+    Arrow UDF, classifier folded as literals (no Python in the score), and
+    each twin fetch building its broadcast once (exchange reuse)."""
+    import re
+
+    from entity_matching_in_online_retail_spark.config import BlockingConfig
+    from entity_matching_in_online_retail_spark.operators import blocking as B
     from entity_matching_in_online_retail_spark.operators.normalize import normalize_web_pages
     from entity_matching_in_online_retail_spark.plans.pipeline import DEFAULT_MATCHER
 
     pages, _, _ = tiny_spark
-    offers = normalize_web_pages(pages, lang="en", use_html=True)
+    offers = normalize_web_pages(pages, lang="en", use_html=True).localCheckpoint()
     idf = S.fit_idf(offers)
     attrs = FE.offers_with_vectors(offers, idf)
     d = str(tmp_path_factory.mktemp("plans2"))
     attrs.write.parquet(d + "/attrs")
-    offers.select("record_id").alias("l").join(
-        offers.select(F.col("record_id").alias("id_r")), F.lit(True)
-    )  # noqa: unused — keep lazy imports exercised
-    pairs = spark.createDataFrame([(1, 2)], "id_l long, id_r long")
+    # real candidate pairs: AQE prunes joins against an empty side, so a
+    # pair table that matches nothing would hide the reuse
+    cfg = BlockingConfig()
+    pairs = B.candidate_pairs(
+        B.cap_blocks(B.all_block_keys(offers, cfg), cfg), cfg
+    ).localCheckpoint()
     attrs_pq = spark.read.parquet(d + "/attrs")
     feats = FE.pair_features(pairs, attrs_pq, gate_jaccard=0.15)
     scored = M.score_pairs(feats, DEFAULT_MATCHER)
-    import re
 
     plan = plan_of(scored)
     # formatted explain prints each node in the tree AND a detail section;
@@ -74,6 +80,15 @@ def test_scoring_plan_shape(spark, tiny_spark, tmp_path_factory):
     # classifier is constant-folded into the projection (a literal coefficient
     # appears in the final plan, no model object / UDF)
     assert str(DEFAULT_MATCHER.coefficients[0]) in plan_of(scored, "extended")
+
+    # Both sides of each twin fetch (light attrs, tf-idf vectors) join the
+    # same subtree, so the final AQE plan builds each broadcast once and
+    # probes it from the second join through a ReusedExchange.
+    assert scored.collect()  # the action must run on `scored` itself
+    executed = scored._jdf.queryExecution().executedPlan().toString()
+    final = executed.split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final
+    assert final.count("ReusedExchange") == 2, final
 
 
 def test_pair_features_variants_equivalent(spark, tiny_spark):

@@ -65,7 +65,16 @@ def test_token_jaccard(spark):
 
 
 # ---- TF-IDF cosine properties ----
-def test_tfidf_cosine_properties(spark):
+def _cosine_fused(il, vl, ir, vr):
+    # the fused broadcast-regime UDF; the title strings only feed jw_sim
+    return S.pair_scores_udf(F.lit("a"), F.lit("b"), il, vl, ir, vr).getField("tfidf_cos")
+
+
+@pytest.mark.parametrize("cosine", [S.sparse_cosine_expr, _cosine_fused],
+                         ids=["sparse_cosine_expr", "pair_scores_udf"])
+def test_tfidf_cosine_properties(spark, cosine):
+    """Both production cosine kernels: sparse_cosine_expr (no-broadcast
+    regime) and pair_scores_udf's tfidf_cos (broadcast regime)."""
     docs = spark.createDataFrame(
         [(1, ["red", "shoe", "nike"]), (2, ["red", "shoe", "adidas"]), (3, ["blue", "hat"])],
         "record_id long, tokens array<string>",
@@ -75,11 +84,12 @@ def test_tfidf_cosine_properties(spark):
     # self-cosine == 1 (L2-normalized)
     both = vec.alias("l").join(vec.alias("r"), F.col("l.record_id") == F.col("r.record_id"))
     self_cos = both.select(
-        S.sparse_cosine_udf(
+        cosine(
             F.col("l.tfidf_idx"), F.col("l.tfidf_val"),
             F.col("r.tfidf_idx"), F.col("r.tfidf_val"),
         ).alias("c")
     ).collect()
+    assert len(self_cos) == 3
     for r in self_cos:
         assert r["c"] == pytest.approx(1.0, abs=1e-9)
     # disjoint docs -> 0; overlapping -> in (0,1)
@@ -90,7 +100,8 @@ def test_tfidf_cosine_properties(spark):
         "il array<long>, vl array<double>, ir array<long>, vr array<double>",
     )
     got = [r["c"] for r in pairs.select(
-        S.sparse_cosine_udf("il", "vl", "ir", "vr").alias("c")).collect()]
+        cosine(F.col("il"), F.col("vl"), F.col("ir"), F.col("vr")).alias("c")
+    ).collect()]
     assert got[0] == pytest.approx(0.0)
     assert 0.0 < got[1] < 1.0
 
